@@ -168,12 +168,6 @@ def polygon_cover(rings, base_res: int, coarsest_res: int = 4,
     return np.asarray(out_cells, dtype=np.int64), np.asarray(out_full, dtype=bool)
 
 
-def disk_cells(cx: float, cy: float, radius: float, res: int):
-    """Cells at ``res`` intersecting the square disk (Chebyshev ball) of
-    ``radius`` around (cx, cy) — used for kNN ring expansion."""
-    return rect_cover(cx - radius, cy - radius, cx + radius, cy + radius, res)
-
-
 def morton_key(xcol, ycol, bits: int = 16):
     """Z-order (Morton) interleave of two non-negative integer Columns —
     the storage-clustering key for spatially co-locating rows in a

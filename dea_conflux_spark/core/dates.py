@@ -1,13 +1,11 @@
 """Date serialisation parity with the reference's filename/metadata
-format ``%Y%m%d-%H%M%S-%f`` (reference io.py:31-77) and the stacked-output
-ISO-Z format (reference stack.py:46-58)."""
+format ``%Y%m%d-%H%M%S-%f`` (reference io.py:31-77)."""
 
 from __future__ import annotations
 
 import datetime as dt
 
 FMT = "%Y%m%d-%H%M%S-%f"
-ISO_Z = "%Y-%m-%dT%H:%M:%SZ"
 
 
 def date_to_string(d: dt.datetime) -> str:
@@ -16,10 +14,6 @@ def date_to_string(d: dt.datetime) -> str:
 
 def string_to_date(s: str) -> dt.datetime:
     return dt.datetime.strptime(s, FMT)
-
-
-def date_to_iso_z(d: dt.datetime) -> str:
-    return d.strftime(ISO_Z)
 
 
 def day_prefix(iso: str) -> str:

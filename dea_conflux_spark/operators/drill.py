@@ -16,20 +16,19 @@ Spark-first re-expression of the reference's scene drill
    no driver collect, no whole-layer broadcast), then a broadcast join
    onto tiles by (gx, gy): tile ``bytes`` are never shuffled and reach
    the UDF exactly once, never once per polygon.
-4. drill UDF (``mapInPandas``, Arrow batches) — decode tile, run the
+4. drill UDF (``mapInArrow``, Arrow batches) — decode tile, run the
    plugin's vectorized ``transform``, assign pixels to polygons by exact
    ray-cast PIP on pixel centres with ascending-ordinal overwrite (matching
    rasterio last-wins, reference drill.py:85-90), and emit per-(polygon,
    tile) **partial aggregates** — pixels never leave the task.
 5. final combine — native ``groupBy(poly_id, ts).agg`` (codegen'd partial →
    final, the reference's per-polygon summarise loop drill.py:675-686).
-6. optional edge-direction flags left join (reference drill.py:604-616,
-   697-703).
+6. optional edge-direction flags (reference drill.py:604-616, 697-703):
+   extents and per-(polygon, extent) flags are prepared at construction,
+   as the candidate table is, and attached by two broadcast left joins.
 """
 
 from __future__ import annotations
-
-import re
 
 import numpy as np
 import pandas as pd
@@ -41,8 +40,6 @@ from ..datagen import GridSpec
 from ..plugins.base import DrillSpec
 from .cover import polygon_cover_df
 from .tilecells import extents_by_ts, tile_cells, tile_meta
-
-_ID_RE = re.compile(r"^t(\d+)_x(\d+)_y(\d+)$")
 
 FLAG_COLS = ["conflux_n", "conflux_s", "conflux_e", "conflux_w"]
 
@@ -260,6 +257,17 @@ def attach_rings(fc: DataFrame, polygons: DataFrame,
                 .alias("cand_polys")))
 
 
+def _footprint_cells(meta: DataFrame, base_res: int) -> DataFrame:
+    """(gx, gy, cell) — the cell cover of every DISTINCT tile footprint."""
+    fps = meta.select("gx", "gy", "x0", "y0", "x1", "y1").distinct()
+    fps = fps.withColumn(
+        "image_id", F.format_string("t0000_x%03d_y%03d", "gx", "gy"))
+    return tile_cells(fps, base_res=base_res).select(
+        F.regexp_extract("image_id", r"_x(\d+)_", 1).cast("int").alias("gx"),
+        F.regexp_extract("image_id", r"_y(\d+)$", 1).cast("int").alias("gy"),
+        "cell")
+
+
 def footprint_candidates(meta: DataFrame, poly_cells: DataFrame,
                          grid: GridSpec, base_res: int = BASE_RES,
                          broadcast_cover: bool = True) -> DataFrame:
@@ -272,14 +280,7 @@ def footprint_candidates(meta: DataFrame, poly_cells: DataFrame,
     is the placement table from ``tile_meta`` (callers with an external
     catalog can pass a cheap metadata-only source instead of re-scanning
     the full tile table)."""
-    fps = meta.select("gx", "gy", "x0", "y0", "x1", "y1").distinct()
-    fps = fps.withColumn(
-        "image_id", F.format_string("t0000_x%03d_y%03d", "gx", "gy"))
-    fcells = tile_cells(fps, base_res=base_res)
-    fcells = fcells.select(
-        F.regexp_extract("image_id", r"_x(\d+)_", 1).cast("int").alias("gx"),
-        F.regexp_extract("image_id", r"_y(\d+)$", 1).cast("int").alias("gy"),
-        "cell")
+    fcells = _footprint_cells(meta, base_res)
     cover = poly_cells.select("cell", "poly_id")
     if broadcast_cover:
         cover = F.broadcast(cover)
@@ -303,14 +304,7 @@ def footprint_candidates_salted(meta: DataFrame, poly_cells: DataFrame,
     stays on as the second line of defence.
     """
     spark = meta.sparkSession
-    fps = meta.select("gx", "gy", "x0", "y0", "x1", "y1").distinct()
-    fps = fps.withColumn(
-        "image_id", F.format_string("t0000_x%03d_y%03d", "gx", "gy"))
-    fcells = tile_cells(fps, base_res=base_res).select(
-        F.regexp_extract("image_id", r"_x(\d+)_", 1).cast("int").alias("gx"),
-        F.regexp_extract("image_id", r"_y(\d+)$", 1).cast("int").alias("gy"),
-        "cell")
-    fcells = fcells.withColumn(
+    fcells = _footprint_cells(meta, base_res).withColumn(
         "salt", F.pmod(F.xxhash64("gx", "gy", "cell"), F.lit(n_salt)))
     salts = spark.range(n_salt).select(F.col("id").cast("int").alias("salt"))
     cover = (poly_cells.select("cell", "poly_id")
@@ -336,7 +330,6 @@ def candidate_pairs(tiles: DataFrame, poly_cells: DataFrame, grid: GridSpec,
 def drill_partials(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
                    grid: GridSpec, *, base_res: int = BASE_RES,
                    broadcast_cover: bool = True,
-                   broadcast_cands: bool = True,
                    rings: str = "auto",
                    meta: DataFrame | None = None) -> DataFrame:
     """Per-(polygon, tile) partial aggregates:
@@ -357,12 +350,11 @@ def drill_partials(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
       polygons that are a candidate of at least one footprint in this
       drill, so broadcast size tracks the queried region, not the layer.
     * ``"join"`` — rings travel inside the candidate join (attach_rings);
-      nothing is collected at the driver.  NB with the default
-      ``broadcast_cands=True`` the ring-attached candidate table is still
-      BROADCAST — since rings are nested per footprint, that broadcast is
-      at least as large as the pruned dimension, so this mode trades
-      driver memory for executor broadcast memory without removing the
-      size ceiling.  When the candidate GEOMETRY itself outgrows the
+      nothing is collected at the driver.  NB the ring-attached candidate
+      table is still BROADCAST — with rings nested per footprint, at least
+      as large as the pruned dimension — so this mode trades driver
+      memory for executor broadcast memory without removing the size
+      ceiling.  When the candidate GEOMETRY itself outgrows the
       broadcast budget, use :func:`drill_partials_cogrouped` over a
       bucketed tile layout — Exchange-free on the tile side, geometry
       shuffled (not broadcast) on the footprint key.
@@ -370,15 +362,19 @@ def drill_partials(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
       is ≤ ~100k polygons (a narrow count on the dim table), else
       ``join`` — same size-gated strategy switch as broadcast_cover.
     """
+    return _partials_and_dim(tiles, polygons, plugin, grid, base_res,
+                             broadcast_cover, rings, meta)[0]
+
+
+def _partials_and_dim(tiles, polygons, plugin, grid, base_res,
+                      broadcast_cover, rings, meta):
+    """:func:`drill_partials` -> ``(partials, rmap)``, where ``rmap`` is the
+    candidate dimension ``{poly_id: (ordinal, rings)}`` collected for the
+    ``rings="dim"`` broadcast (None on the ``join`` path)."""
     if rings not in ("auto", "dim", "join"):
         raise ValueError(f"rings must be 'auto', 'dim' or 'join', got "
                          f"{rings!r}")
-    spark = tiles.sparkSession
-    sc = spark.sparkContext
-
-    # The cover table is the small join side — cache it so the several
-    # actions inside one drill (candidate join, partials, final agg) don't
-    # recompute the quadtree covers.
+    sc = tiles.sparkSession.sparkContext
     poly_cells = polygon_cover_df(polygons, base_res=base_res)
     meta_src = meta if meta is not None else tile_meta(tiles, grid)
     if broadcast_cover == "auto":
@@ -394,36 +390,29 @@ def drill_partials(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
     else:
         fc = footprint_candidates_salted(meta_src, poly_cells, grid,
                                          base_res)
-    rings_b = None
+    rmap = rings_b = None
     if rings in ("auto", "dim"):
         # fc feeds up to three actions on these paths (dim count, dim
         # collect, the tile join) — materialise it once instead of
         # re-deriving the footprint-candidate join per action.  fc is the
         # small footprint-grain table (id lists only, no geometry).
         fc = fc.localCheckpoint(eager=True)
-    if rings == "auto":
         # candidate-pruned dimension: only polygons that are a candidate
         # of at least one footprint in this drill
         cand_ids = fc.select(
             F.explode("cand_polys").alias("poly_id")).distinct()
         dim = polygons.join(cand_ids, "poly_id").select(
             "poly_id", "ordinal", "rings")
-        rings = "dim" if dim.count() <= 100_000 else "join"
-    elif rings == "dim":
-        cand_ids = fc.select(
-            F.explode("cand_polys").alias("poly_id")).distinct()
-        dim = polygons.join(cand_ids, "poly_id").select(
-            "poly_id", "ordinal", "rings")
+        if rings == "auto":
+            rings = "dim" if dim.count() <= 100_000 else "join"
     if rings == "dim":
-        rings_b = sc.broadcast({
-            r["poly_id"]: (int(r["ordinal"]), r["rings"])
-            for r in dim.collect()})
+        rmap = {r["poly_id"]: (int(r["ordinal"]), r["rings"])
+                for r in dim.collect()}
+        rings_b = sc.broadcast(rmap)
         fc = fc.select("gx", "gy",
                        F.sort_array("cand_polys").alias("cand_polys"))
     else:
         fc = attach_rings(fc, polygons)
-    if broadcast_cands:
-        fc = F.broadcast(fc)
     # Only the columns the UDF needs cross the Arrow boundary: caption and
     # phash stay JVM-side (columnar pruning keeps them out of the scan too).
     # The candidate attach is a broadcast equi-join on the (gx, gy)
@@ -435,7 +424,7 @@ def drill_partials(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
                 "image_id", r"_x(\d+)_", 1).cast("int"))
             .withColumn("gy", F.regexp_extract(
                 "image_id", r"_y(\d+)$", 1).cast("int"))
-            .join(fc, ["gx", "gy"]))
+            .join(F.broadcast(fc), ["gx", "gy"]))
 
     # Co-locate same-footprint tiles inside each partition: ownership
     # (pixel -> polygon) is timestep-invariant per grid slot, so adjacent
@@ -456,7 +445,7 @@ def drill_partials(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
             _drill_rows_arrow(plugin, rb, driller, out)
             yield _flush_arrow(plugin, out)
 
-    return work.mapInArrow(run, schema=schema)
+    return work.mapInArrow(run, schema=schema), rmap
 
 
 def _flush_arrow(plugin: DrillSpec, out: dict):
@@ -583,26 +572,45 @@ def _drill_rows_arrow(plugin: DrillSpec, rb, driller, out: dict) -> None:
 def drill(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
           grid: GridSpec, *, partial: bool = True,
           base_res: int = BASE_RES, broadcast_cover: bool = True,
-          broadcast_cands: bool = True, rings: str = "auto",
-          meta: DataFrame | None = None) -> DataFrame:
+          rings: str = "auto", meta: DataFrame | None = None) -> DataFrame:
     """Run one drill over every tile; returns
     ``(poly_id, ts, <plugin metrics>[, conflux_n/s/e/w])``.
 
     ``meta`` optionally supplies the placement table (tile_meta shape) from
     a lightweight catalog source so the metadata passes (footprints,
-    extents) never scan the heavy bytes column."""
-    partials = drill_partials(tiles, polygons, plugin, grid,
-                              base_res=base_res,
-                              broadcast_cover=broadcast_cover,
-                              broadcast_cands=broadcast_cands,
-                              rings=rings,
-                              meta=meta)
-    result = partials.groupBy("poly_id", "ts").agg(*plugin.final_aggs())
+    extents) never scan the heavy bytes column.  Layer prep — footprint
+    candidates, candidate dimension and, with ``partial=True``, the
+    extents and edge-flag tables — runs here, at construction."""
+    partials, rmap = _partials_and_dim(tiles, polygons, plugin, grid,
+                                       base_res, broadcast_cover, rings, meta)
+    return _finish(partials, plugin, partial, polygons,
+                   meta if meta is not None else tile_meta(tiles, grid),
+                   rmap)
 
-    if partial:
-        meta_src = meta if meta is not None else tile_meta(tiles, grid)
-        result = attach_edge_flags(result, polygons, extents_by_ts(meta_src))
-    return result
+
+def _finish(partials: DataFrame, plugin: DrillSpec, partial: bool,
+            polygons: DataFrame, meta: DataFrame,
+            rmap: dict | None = None) -> DataFrame:
+    """Shared tail of :func:`drill` and :func:`drill_cogrouped`: the final
+    ``(poly_id, ts)`` aggregate plus, with ``partial``, the edge flags from
+    tables built here, eagerly — flag rows from the collected candidate
+    dimension ``rmap``, else from one run of the per-extent pass — and
+    handed to the JVM through Arrow (pandas, not a Python-worker RDD)."""
+    result = partials.groupBy("poly_id", "ts").agg(*plugin.final_aggs())
+    if not partial:
+        return result
+    spark = result.sparkSession
+    ext = extents_by_ts(meta).toPandas()
+    extents = spark.createDataFrame(ext, _EXT_SCHEMA)
+    if rmap is None:
+        flags = _edge_flags_per_extent(polygons, extents).toPandas()
+    else:
+        flags = _flag_frame(
+            (pid, rings_v, *e) for e in
+            ext[_EXT_COLS].drop_duplicates().itertuples(index=False)
+            for pid, (_, rings_v) in rmap.items())
+    return _attach_flags(result, extents,
+                         spark.createDataFrame(flags, _FLAG_SCHEMA))
 
 
 def with_slot_keys(tiles: DataFrame, n_time_buckets: int = 1) -> DataFrame:
@@ -663,8 +671,7 @@ def drill_partials_cogrouped(tiles: DataFrame, polygons: DataFrame,
       row together, so ring geometry crosses the Arrow boundary ONCE per
       (footprint, time-bucket) group instead of once per tile row (the
       measured ~2.4x per-row nesting tax of the join payload) and never
-      rides a broadcast (the ``rings="join"`` + ``broadcast_cands`` size
-      ceiling).
+      rides a broadcast (the ``rings="join"`` size ceiling).
 
     Replaces the reference's ship-the-whole-shapefile-to-every-worker
     pattern (reference __main__.py:902-906) with geometry movement that is
@@ -765,76 +772,69 @@ def drill_cogrouped(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
         tiles, polygons, plugin, grid, base_res=base_res,
         broadcast_cover=broadcast_cover, n_time_buckets=n_time_buckets,
         meta=meta)
-    result = partials.groupBy("poly_id", "ts").agg(*plugin.final_aggs())
-    if partial:
-        meta_src = meta if meta is not None else tile_meta(tiles, grid)
-        result = attach_edge_flags(result, polygons, extents_by_ts(meta_src))
-    return result
+    return _finish(partials, plugin, partial, polygons,
+                   meta if meta is not None else tile_meta(tiles, grid))
+
+
+_EXT_COLS = ["ex0", "ey0", "ex1", "ey1"]
+_EXT_SCHEMA = "ts timestamp, ex0 double, ey0 double, ex1 double, ey1 double"
+_FLAG_SCHEMA = ("poly_id string, ex0 double, ey0 double, ex1 double, "
+                "ey1 double, conflux_n boolean, conflux_s boolean, "
+                "conflux_e boolean, conflux_w boolean")
+
+
+def _flag_frame(rows) -> pd.DataFrame:
+    """(poly_id, rings, ex0, ey0, ex1, ey1) tuples -> one flag row each:
+    in which compass directions the polygon overflows the extent
+    (reference drill.py:104-220 rule, numpy port)."""
+    out = []
+    for pid, rings_v, *ext in rows:
+        d = geom.edge_directions(rings_v, *ext)
+        out.append((pid, *ext, d["North"], d["South"], d["East"],
+                    d["West"]))
+    return pd.DataFrame(out, columns=["poly_id", *_EXT_COLS, *FLAG_COLS])
 
 
 def _edge_flags_per_extent(polygons: DataFrame,
                            extents: DataFrame) -> DataFrame:
     """(poly_id, ex0, ey0, ex1, ey1, conflux_n/s/e/w) — the edge-overflow
     flags per (polygon, DISTINCT extent): the O(polygons x distinct
-    extents) core of the edge-flag rule (reference drill.py:104-220,
-    numpy port).  The polygon pass is repartitioned so the geometry work
-    parallelises instead of riding a single-partition crossJoin."""
+    extents) core of the edge-flag rule.  The polygon pass is
+    repartitioned so the geometry work parallelises instead of riding a
+    single-partition crossJoin."""
     spark = polygons.sparkSession
-    ext_d = extents.select("ex0", "ey0", "ex1", "ey1").distinct()
+    ext_d = extents.select(*_EXT_COLS).distinct()
     j = (polygons.select("poly_id", "rings").crossJoin(F.broadcast(ext_d))
          .repartition(spark.sparkContext.defaultParallelism))
-    schema = ("poly_id string, ex0 double, ey0 double, ex1 double, "
-              "ey1 double, conflux_n boolean, conflux_s boolean, "
-              "conflux_e boolean, conflux_w boolean")
 
     def run(batches):
         for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                d = geom.edge_directions(r.rings, r.ex0, r.ey0, r.ex1, r.ey1)
-                rows.append((r.poly_id, r.ex0, r.ey0, r.ex1, r.ey1,
-                             d["North"], d["South"], d["East"], d["West"]))
-            yield pd.DataFrame(rows, columns=[
-                "poly_id", "ex0", "ey0", "ex1", "ey1", "conflux_n",
-                "conflux_s", "conflux_e", "conflux_w"])
+            yield _flag_frame(pdf[["poly_id", "rings", *_EXT_COLS]]
+                              .itertuples(index=False))
 
-    return j.mapInPandas(run, schema=schema)
-
-
-def edge_flags_df(polygons: DataFrame, extents: DataFrame) -> DataFrame:
-    """Per (poly_id, ts): in which compass directions the polygon overflows
-    the observed extent (reference drill.py:104-220 rule, numpy port).
-
-    Computed per DISTINCT extent (usually one — the grid bbox is
-    time-invariant) and joined back to the timesteps, so compute cost is
-    O(polygons x distinct extents), not O(polygons x timesteps).  NB the
-    RESULT of this helper is O(polygons x timesteps) rows — drill()
-    attaches flags via :func:`attach_edge_flags` instead, which never
-    materialises (or broadcasts) that product."""
-    per_extent = _edge_flags_per_extent(polygons, extents)
-    return (extents.join(per_extent, ["ex0", "ey0", "ex1", "ey1"])
-            .select("poly_id", "ts", *FLAG_COLS))
+    return j.mapInPandas(run, schema=_FLAG_SCHEMA)
 
 
 def attach_edge_flags(result: DataFrame, polygons: DataFrame,
                       extents: DataFrame) -> DataFrame:
-    """Left-attach the edge flags to a (poly_id, ts)-grain result through
-    TWO tiny broadcasts — the timestep->extent map (one row per
-    timestep) and the per-(polygon, distinct extent) flag table — instead
-    of broadcasting the materialised (polygons x timesteps) flag product
-    (~6M rows / hundreds of MB at the bench config; the driver-side
-    collect + hash-relation build of that broadcast was measured as THE
-    dominant cost of the whole drill, ~11 s of an 18 s run).  Join
-    equivalence: a result row's ts resolves its extent (or null), and
-    (poly_id, extent) resolves the same flag row the materialised
-    product would have carried; misses null-fill to False exactly as
-    before."""
-    per_extent = _edge_flags_per_extent(polygons, extents)
-    ext_cols = ["ex0", "ey0", "ex1", "ey1"]
+    """Left-attach the edge flags to a (poly_id, ts)-grain result, with
+    the per-(polygon, extent) flags computed lazily, as part of the
+    result's own plan (:func:`drill` prepares them eagerly instead)."""
+    return _attach_flags(result, extents,
+                         _edge_flags_per_extent(polygons, extents))
+
+
+def _attach_flags(result: DataFrame, extents: DataFrame,
+                  per_extent: DataFrame) -> DataFrame:
+    """Left-attach the flags through TWO tiny broadcasts — the
+    timestep->extent map and the per-(polygon, distinct extent) flag
+    table — never the (polygons x timesteps) product.  A result row's ts
+    resolves its extent, (poly_id, extent) its flag row; misses are
+    False."""
     return (result
-            .join(F.broadcast(extents.select("ts", *ext_cols)),
+            .join(F.broadcast(extents.select("ts", *_EXT_COLS)),
                   "ts", "left")
             .join(F.broadcast(per_extent),
-                  ["poly_id", *ext_cols], "left")
-            .drop(*ext_cols)
+                  ["poly_id", *_EXT_COLS], "left")
+            .drop(*_EXT_COLS)
             .fillna(False, subset=FLAG_COLS))

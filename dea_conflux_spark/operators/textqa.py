@@ -391,8 +391,13 @@ def bm25_topk(docs: DataFrame, query_terms=BM25_QUERY_TERMS, k: int = 10,
     Spark and DuckDB oracles add identical doubles (documents with no
     matching term are excluded, as before — they have no tf rows in the
     oracle's formulation).  No Python anywhere.
+
+    A query term given twice counts once; an empty query matches nothing.
     """
-    terms = [t.lower() for t in query_terms]
+    terms = list(dict.fromkeys(t.lower() for t in query_terms))
+    if not terms:
+        return docs.select("doc_id", F.lit(0.0).alias("score"),
+                           F.lit(1).alias("rnk")).limit(0)
     toksc = tokens_col(F.col("text"))
     row = once(ensure_spread(docs).select(
         "doc_id", F.size(toksc).alias("dl"),

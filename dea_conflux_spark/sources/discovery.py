@@ -2,7 +2,7 @@
 
 Reference parity:
 
-* ``find_parquet_files`` / ``find_csv_files`` (reference stack.py:61-171)
+* ``find_parquet_files`` (reference stack.py:119-171)
   — recursive discovery + extension/regex filename filter — becomes a
   glob read plus an ``input_file_name()`` rlike predicate (Catalyst still
   prunes columns; the filter runs on file-name metadata, not data).
@@ -26,16 +26,6 @@ def find_parquet(spark, path_glob: str, name_pattern: str | None = None,
         reader = reader.schema(schema)
     df = reader.parquet(path_glob).withColumn(
         "_src_file", F.input_file_name())
-    if name_pattern:
-        df = df.filter(
-            F.element_at(F.split("_src_file", "/"), -1).rlike(name_pattern))
-    return df
-
-
-def find_csv(spark, path_glob: str, name_pattern: str | None = None,
-             header: bool = True) -> DataFrame:
-    df = (spark.read.option("header", header).csv(path_glob)
-          .withColumn("_src_file", F.input_file_name()))
     if name_pattern:
         df = df.filter(
             F.element_at(F.split("_src_file", "/"), -1).rlike(name_pattern))

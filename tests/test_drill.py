@@ -279,3 +279,60 @@ def test_mini_drill_fixture_matches_duckdb_oracle(spark):
     pd.testing.assert_frame_equal(
         got.astype({"ts": "datetime64[ns]"}),
         exp.astype({"ts": "datetime64[ns]"}))
+
+
+def test_edge_flags_follow_each_timestep_extent(spark, grid, polys,
+                                                tiles_pdf, polygons):
+    """Timestep 1 lacks its last column of tiles, so the drill sees two
+    distinct extents: every (poly_id, ts) row carries the flags of its
+    own timestep's extent, identically on the dim, join and cogrouped
+    paths; the default (dim) plan holds no Python pass besides the
+    partials (the flag tables are local relations)."""
+    from dea_conflux_spark import datagen
+    from dea_conflux_spark.config import EPOCH
+    from dea_conflux_spark.core import geom
+
+    cut = {datagen.image_id(1, grid.G - 1, gy) for gy in range(grid.G)}
+    tiles = spark.createDataFrame(tiles_pdf[~tiles_pdf["image_id"].isin(cut)],
+                                  schema=datagen.TILE_SCHEMA)
+    plugin = get_plugin("waterbodies_c3")
+    runs = [drill_op.drill(tiles, polygons, plugin, grid, rings="dim"),
+            drill_op.drill(tiles, polygons, plugin, grid, rings="join"),
+            drill_op.drill_cogrouped(tiles, polygons, plugin, grid)]
+    assert "MapInPandas" not in _fmt_plan(runs[0])
+    got = [r.toPandas().sort_values(["poly_id", "ts"]).reset_index(drop=True)
+           for r in runs]
+    for g in got[1:]:
+        pd.testing.assert_frame_equal(g, got[0])
+
+    full = grid.extent
+    short = (full[0], full[1], full[2] - grid.tile_span_x, full[3])
+    day1 = pd.Timestamp(EPOCH) + pd.Timedelta(days=1)
+    rings = {p["poly_id"]: p["rings"] for p in polys}
+    seen: dict = {}
+    for r in got[0].itertuples():
+        ext = short if pd.Timestamp(r.ts) == day1 else full
+        d = geom.edge_directions(rings[r.poly_id], *ext)
+        want = (d["North"], d["South"], d["East"], d["West"])
+        assert tuple(bool(getattr(r, c)) for c in drill_op.FLAG_COLS) \
+            == want, (r.poly_id, r.ts)
+        seen.setdefault(r.poly_id, set()).add(want)
+    assert any(len(v) > 1 for v in seen.values()), \
+        "no polygon's flags differ between the two extents"
+
+
+@pytest.mark.parametrize("partial", [True, False])
+@pytest.mark.parametrize("empty", ["tiles", "polygons"])
+def test_drill_empty_input(tiles, polygons, grid, empty, partial):
+    """An empty tile set or polygon layer drills to no rows, with the
+    output schema of a non-empty drill."""
+    plugin = get_plugin("waterbodies_c3")
+    ref = drill_op.drill(tiles, polygons, plugin, grid, partial=partial)
+    if empty == "tiles":
+        tiles = tiles.limit(0)
+    else:
+        polygons = polygons.limit(0)
+    got = drill_op.drill(tiles, polygons, plugin, grid, partial=partial)
+    assert got.count() == 0
+    assert [(f.name, f.dataType) for f in got.schema] == \
+        [(f.name, f.dataType) for f in ref.schema]

@@ -1162,6 +1162,31 @@ def test_bm25_topk_excludes_nonmatching_docs(spark):
     assert out["score"].iloc[0] == math.floor(score * 1e4 + 0.5) / 1e4
 
 
+def test_bm25_topk_duplicate_query_term_counts_once(spark):
+    """A query term repeated (in any case) scores as if given once."""
+    rows = [(1, "spark spark runs a query"), (2, "a query about scan"),
+            (3, "plain text with no hits either")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    once_ = textqa.bm25_topk(docs, query_terms=("spark", "query"),
+                             k=5).toPandas()
+    twice = textqa.bm25_topk(docs, query_terms=("spark", "query", "Spark"),
+                             k=5).toPandas()
+    assert len(once_) == 2
+    pd.testing.assert_frame_equal(twice, once_)
+
+
+def test_bm25_topk_empty_query(spark):
+    """An empty query returns no rows, with the (doc_id, score, rnk)
+    schema of a non-empty one."""
+    docs = spark.createDataFrame([(1, "spark query")],
+                                 "doc_id long, text string")
+    out = textqa.bm25_topk(docs, query_terms=(), k=5)
+    ref = textqa.bm25_topk(docs, query_terms=("spark",), k=5)
+    assert out.count() == 0
+    assert [(f.name, f.dataType) for f in out.schema] == \
+        [(f.name, f.dataType) for f in ref.schema]
+
+
 def test_kmeans_assign_vs_numpy(embeddings):
     """kmeans_assign matches a from-scratch numpy Lloyd's with the same
     deterministic init, 6-dp centroid pinning, and tie rule."""

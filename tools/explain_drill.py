@@ -78,8 +78,11 @@ def main():
     n_shuffles = len(re.findall(r"hashpartitioning\(", plan))
     check("no shuffle carries the bytes column",
           not re.search(r"Exchange[^\n]*bytes", plan))
-    check("python stage is Arrow-batched (MapInPandas/ArrowEvalPython)",
-          ("MapInPandas" in plan) or ("ArrowEval" in plan))
+    check("partials stage is Arrow-batched (MapInArrow)",
+          "MapInArrow" in plan)
+    check("default plan has no MapInPandas: the edge-flag tables are "
+          "prepared at construction (local relations), so an action runs "
+          "no flag pass", "MapInPandas" not in plan)
     check("default (auto/dim) plan: per-row candidate payload is id-only "
           "— no ring-struct aggregation feeds the tile join (pruned "
           "dimension broadcast instead; rings appear only in the "
@@ -142,7 +145,8 @@ def main():
         f"cogroup shuffle payload) | {nested:,} |", "",
         f"Nesting duplicates geometry {nested / max(dim, 1):.2f}x vs the "
         "pruned dimension here (grows with footprint overlap), which is "
-        "why rings='join' + broadcast_cands was NOT a scale escape hatch "
+        "why rings='join' (a broadcast candidate table) was NOT a scale "
+        "escape hatch "
         "— the cogrouped path moves the same nested payload but through "
         "a hash SHUFFLE (per-reducer slices) instead of a broadcast "
         "(every executor holds all of it), and tile bytes stay put in "
