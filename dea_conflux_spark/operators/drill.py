@@ -362,15 +362,6 @@ def drill_partials(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
       is ≤ ~100k polygons (a narrow count on the dim table), else
       ``join`` — same size-gated strategy switch as broadcast_cover.
     """
-    return _partials_and_dim(tiles, polygons, plugin, grid, base_res,
-                             broadcast_cover, rings, meta)[0]
-
-
-def _partials_and_dim(tiles, polygons, plugin, grid, base_res,
-                      broadcast_cover, rings, meta):
-    """:func:`drill_partials` -> ``(partials, rmap)``, where ``rmap`` is the
-    candidate dimension ``{poly_id: (ordinal, rings)}`` collected for the
-    ``rings="dim"`` broadcast (None on the ``join`` path)."""
     if rings not in ("auto", "dim", "join"):
         raise ValueError(f"rings must be 'auto', 'dim' or 'join', got "
                          f"{rings!r}")
@@ -390,7 +381,7 @@ def _partials_and_dim(tiles, polygons, plugin, grid, base_res,
     else:
         fc = footprint_candidates_salted(meta_src, poly_cells, grid,
                                          base_res)
-    rmap = rings_b = None
+    rings_b = None
     if rings in ("auto", "dim"):
         # fc feeds up to three actions on these paths (dim count, dim
         # collect, the tile join) — materialise it once instead of
@@ -406,9 +397,9 @@ def _partials_and_dim(tiles, polygons, plugin, grid, base_res,
         if rings == "auto":
             rings = "dim" if dim.count() <= 100_000 else "join"
     if rings == "dim":
-        rmap = {r["poly_id"]: (int(r["ordinal"]), r["rings"])
-                for r in dim.collect()}
-        rings_b = sc.broadcast(rmap)
+        rings_b = sc.broadcast({
+            r["poly_id"]: (int(r["ordinal"]), r["rings"])
+            for r in dim.collect()})
         fc = fc.select("gx", "gy",
                        F.sort_array("cand_polys").alias("cand_polys"))
     else:
@@ -445,7 +436,7 @@ def _partials_and_dim(tiles, polygons, plugin, grid, base_res,
             _drill_rows_arrow(plugin, rb, driller, out)
             yield _flush_arrow(plugin, out)
 
-    return work.mapInArrow(run, schema=schema), rmap
+    return work.mapInArrow(run, schema=schema)
 
 
 def _flush_arrow(plugin: DrillSpec, out: dict):
@@ -581,34 +572,28 @@ def drill(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
     extents) never scan the heavy bytes column.  Layer prep — footprint
     candidates, candidate dimension and, with ``partial=True``, the
     extents and edge-flag tables — runs here, at construction."""
-    partials, rmap = _partials_and_dim(tiles, polygons, plugin, grid,
-                                       base_res, broadcast_cover, rings, meta)
+    partials = drill_partials(tiles, polygons, plugin, grid,
+                              base_res=base_res,
+                              broadcast_cover=broadcast_cover,
+                              rings=rings, meta=meta)
     return _finish(partials, plugin, partial, polygons,
-                   meta if meta is not None else tile_meta(tiles, grid),
-                   rmap)
+                   meta if meta is not None else tile_meta(tiles, grid))
 
 
 def _finish(partials: DataFrame, plugin: DrillSpec, partial: bool,
-            polygons: DataFrame, meta: DataFrame,
-            rmap: dict | None = None) -> DataFrame:
+            polygons: DataFrame, meta: DataFrame) -> DataFrame:
     """Shared tail of :func:`drill` and :func:`drill_cogrouped`: the final
-    ``(poly_id, ts)`` aggregate plus, with ``partial``, the edge flags from
-    tables built here, eagerly — flag rows from the collected candidate
-    dimension ``rmap``, else from one run of the per-extent pass — and
-    handed to the JVM through Arrow (pandas, not a Python-worker RDD)."""
+    ``(poly_id, ts)`` aggregate plus, with ``partial``, the edge flags.
+    The extents and one run of the parallel per-extent flag pass are
+    collected here, eagerly, and handed back to the JVM through Arrow
+    (pandas, not a Python-worker RDD), so no action re-runs them."""
     result = partials.groupBy("poly_id", "ts").agg(*plugin.final_aggs())
     if not partial:
         return result
     spark = result.sparkSession
-    ext = extents_by_ts(meta).toPandas()
-    extents = spark.createDataFrame(ext, _EXT_SCHEMA)
-    if rmap is None:
-        flags = _edge_flags_per_extent(polygons, extents).toPandas()
-    else:
-        flags = _flag_frame(
-            (pid, rings_v, *e) for e in
-            ext[_EXT_COLS].drop_duplicates().itertuples(index=False)
-            for pid, (_, rings_v) in rmap.items())
+    extents = spark.createDataFrame(extents_by_ts(meta).toPandas(),
+                                    _EXT_SCHEMA)
+    flags = _edge_flags_per_extent(polygons, extents).toPandas()
     return _attach_flags(result, extents,
                          spark.createDataFrame(flags, _FLAG_SCHEMA))
 
@@ -783,23 +768,12 @@ _FLAG_SCHEMA = ("poly_id string, ex0 double, ey0 double, ex1 double, "
                 "conflux_e boolean, conflux_w boolean")
 
 
-def _flag_frame(rows) -> pd.DataFrame:
-    """(poly_id, rings, ex0, ey0, ex1, ey1) tuples -> one flag row each:
-    in which compass directions the polygon overflows the extent
-    (reference drill.py:104-220 rule, numpy port)."""
-    out = []
-    for pid, rings_v, *ext in rows:
-        d = geom.edge_directions(rings_v, *ext)
-        out.append((pid, *ext, d["North"], d["South"], d["East"],
-                    d["West"]))
-    return pd.DataFrame(out, columns=["poly_id", *_EXT_COLS, *FLAG_COLS])
-
-
 def _edge_flags_per_extent(polygons: DataFrame,
                            extents: DataFrame) -> DataFrame:
     """(poly_id, ex0, ey0, ex1, ey1, conflux_n/s/e/w) — the edge-overflow
     flags per (polygon, DISTINCT extent): the O(polygons x distinct
-    extents) core of the edge-flag rule.  The polygon pass is
+    extents) core of the edge-flag rule (reference drill.py:104-220,
+    numpy port).  The polygon pass is
     repartitioned so the geometry work parallelises instead of riding a
     single-partition crossJoin."""
     spark = polygons.sparkSession
@@ -809,8 +783,13 @@ def _edge_flags_per_extent(polygons: DataFrame,
 
     def run(batches):
         for pdf in batches:
-            yield _flag_frame(pdf[["poly_id", "rings", *_EXT_COLS]]
-                              .itertuples(index=False))
+            rows = []
+            for r in pdf.itertuples():
+                d = geom.edge_directions(r.rings, r.ex0, r.ey0, r.ex1, r.ey1)
+                rows.append((r.poly_id, r.ex0, r.ey0, r.ex1, r.ey1,
+                             d["North"], d["South"], d["East"], d["West"]))
+            yield pd.DataFrame(rows, columns=["poly_id", *_EXT_COLS,
+                                              *FLAG_COLS])
 
     return j.mapInPandas(run, schema=_FLAG_SCHEMA)
 
