@@ -15,12 +15,16 @@ Spark-first re-expression of the reference's scene drill
    (``attach_rings``: geometry travels only to footprints that need it;
    no driver collect, no whole-layer broadcast), then a broadcast join
    onto tiles by (gx, gy): tile ``bytes`` are never shuffled and reach
-   the UDF exactly once, never once per polygon.
-4. drill UDF (``mapInArrow``, Arrow batches) — decode tile, run the
-   plugin's vectorized ``transform``, assign pixels to polygons by exact
-   ray-cast PIP on pixel centres with ascending-ordinal overwrite (matching
-   rasterio last-wins, reference drill.py:85-90), and emit per-(polygon,
-   tile) **partial aggregates** — pixels never leave the task.
+   the UDF exactly once, never once per polygon.  Nothing sorts them:
+   the scan streams through the join into the UDF in storage order.
+4. drill UDF (``mapInArrow``, Arrow batches) — group the rows of each
+   window of consecutive batches by footprint into time stacks, decode
+   tiles, run the plugin's vectorized kernel, assign pixels to polygons
+   by exact ray-cast PIP on pixel centres with ascending-ordinal
+   overwrite (matching rasterio last-wins, reference drill.py:85-90; one
+   owner raster per footprint, kept for the whole task), and emit
+   per-(polygon, tile) **partial aggregates** — pixels never leave the
+   task.
 5. final combine — native ``groupBy(poly_id, ts).agg`` (codegen'd partial →
    final, the reference's per-polygon summarise loop drill.py:675-686).
 6. optional edge-direction flags (reference drill.py:604-616, 697-703):
@@ -29,6 +33,8 @@ Spark-first re-expression of the reference's scene drill
 """
 
 from __future__ import annotations
+
+from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
@@ -44,75 +50,117 @@ from .tilecells import extents_by_ts, tile_cells, tile_meta
 FLAG_COLS = ["conflux_n", "conflux_s", "conflux_e", "conflux_w"]
 
 
-def _make_driller(plugin: DrillSpec, g: GridSpec, rmap: dict | None = None):
+# Owner-cache budget of one task: bytes of owner rasters plus the
+# arrays plugins memoize in their scratch.  A task at the package's 16m
+# scan split holds at most 16 MiB of one-byte pixels, and a footprint's
+# owner with its scratch takes 4-17 bytes per pixel on the flagship
+# layer (median 5.5: int32 owner, bool selector, then index and gather
+# order of the assigned pixels), so even a split of distinct, fully
+# covered footprints stays resident.
+_OWNER_CACHE_BYTES = 17 * (16 << 20)
+
+# The drill UDF groups rows by footprint across consecutive Arrow
+# batches until they average _MIN_STACK tiles per footprint or hold
+# _WINDOW_BYTES: a time-major split (each batch one or two scenes) then
+# still forms time stacks of ~16 tiles at 128x128 px instead of 1-2
+# (the stacked kernel costs ~55 us/tile at T=1 and ~20 us/tile from
+# T=32), while clustered batches are drilled as they arrive.
+_MIN_STACK = 16
+_WINDOW_BYTES = 64 << 20
+
+
+def _entry_nbytes(entry) -> int:
+    """Array bytes of an owner-cache entry: the owner raster plus the
+    numpy arrays in its scratch (top level or inside a tuple)."""
+    owner, scratch = entry
+    n = owner.nbytes
+    for v in scratch.values():
+        for x in (v if isinstance(v, tuple) else (v,)):
+            if isinstance(x, np.ndarray):
+                n += x.nbytes
+    return n
+
+
+class _Driller:
     """Per-task drill state shared by both execution paths (the joined
-    stream ``mapInPandas`` and the cogrouped ``applyInPandas``): a
-    prepared-geometry cache, an owner-raster cache, a per-footprint
-    candidate-list cache, and the per-tile drill step.  Returns
-    ``(drill_one, cands_for, owner_for, prep_cache)``.
+    stream ``mapInArrow`` and the cogrouped ``applyInArrow``).
 
-    * ``prep_cache`` — tiles of the same footprint reuse the Prepared edge
-      arrays instead of rebuilding them per tile.
-    * owner cache — the pixel->polygon assignment depends only on the
-      footprint geometry and candidate set, so every timestep of a grid
-      slot reuses it: rasterisation cost is O(distinct footprints), not
-      O(tiles).  Small cap; adjacency (partition-local sort / grouping)
-      makes repeats adjacent so a handful of entries achieves ~full reuse.
-    * candidate cache (``cands_for``) — the per-row candidate payload is
-      identical for every timestep of a footprint, so the decode of the
-      Arrow struct list, the prep inserts, and the ordinal sort run once
-      per footprint instead of once per tile row (~candidates x tiles
-      dict/list operations saved).  The per-slot scratch also memoizes the
-      {ordinal: poly_id} output map and the ordinal list.
+    * candidate lists (``cands_for``) — the candidate payload is the same
+      for every timestep of a footprint, so it is decoded once per task
+      into ascending ``[(ordinal, poly_id)]``.
+    * owner rasters (``owner_for``) — the pixel->polygon assignment
+      depends only on the footprint geometry and candidate set, so every
+      timestep of a grid slot reuses it.  Tiles stream in storage order,
+      and a time-major task meets each footprint again on every
+      timestep, so the cache is an LRU bounded by ``_OWNER_CACHE_BYTES``
+      (sized to keep every footprint of a task) that evicts one
+      footprint at a time.  An entry's size is measured again at the
+      next build, once the kernel has filled its scratch.
+    * prepared geometry — built only inside an owner build, where
+      neighbouring footprints share it; a cached owner no longer needs
+      it, so it is dropped whenever the owner cache evicts."""
 
-    The three caches evict TOGETHER (inside the owner build): a candidate
-    cache hit therefore implies its Prepared geometries are still
-    resident."""
-    prep_cache: dict = {}
-    owner_cache: dict = {}
-    cands_cache: dict = {}
+    def __init__(self, plugin: DrillSpec, g: GridSpec,
+                 rmap: dict | None = None):
+        self.plugin, self.g, self.rmap = plugin, g, rmap
+        self.cands: dict = {}
+        self.owners: OrderedDict = OrderedDict()
+        self.sizes: dict = {}
+        self.nbytes = 0
+        self.last = None
+        self.preps: dict = {}
 
-    def cands_for(gx, gy, payload):
-        """Ascending [(ordinal, poly_id)] for a footprint, memoized; on a
-        miss the Prepared geometries are (re)inserted into prep_cache."""
+    def cands_for(self, gx, gy, payload):
+        """Ascending [(ordinal, poly_id)] for a footprint, memoized.
+        ``payload`` is the row's Arrow candidate list: poly ids when the
+        pruned dimension ``rmap`` is given, else (ordinal, poly_id,
+        rings) structs already in ascending order (``attach_rings``)."""
         key = (gx, gy)
-        c = cands_cache.get(key)
-        if c is not None:
-            return c
-        c = []
-        if rmap is None:
-            # rings inside the candidate join payload (already in
-            # ascending-ordinal order via sort_array)
-            for s in payload:
-                ordinal, pid = int(s["ordinal"]), s["poly_id"]
-                if pid not in prep_cache:
-                    prep_cache[pid] = geom.prepare(s["rings"])
-                c.append((ordinal, pid))
-        else:
-            # id-only payload; geometry from the pruned-dimension
-            # broadcast, sorted to ascending drill order
-            for pid in payload:
-                ordinal, rings_v = rmap[pid]
-                if pid not in prep_cache:
-                    prep_cache[pid] = geom.prepare(rings_v)
-                c.append((ordinal, pid))
-            c.sort()
-        cands_cache[key] = c
+        c = self.cands.get(key)
+        if c is None:
+            if self.rmap is None:
+                vals = payload.values
+                c = [(int(o), pid) for o, pid in
+                     zip(vals.field("ordinal").to_pylist(),
+                         vals.field("poly_id").to_pylist())]
+            else:
+                c = sorted((self.rmap[pid][0], pid)
+                           for pid in payload.as_py())
+            self.cands[key] = c
         return c
 
-    def owner_for(gx, gy, h, w, cands):
+    def owner_for(self, gx, gy, h, w, cands, payload):
         """-> (owner raster, per-slot scratch dict).  The scratch dict
         shares the owner's cache lifetime; plugins memoize owner-derived
         index structures in it (base.owner_index)."""
         key = (gx, gy, h, w)
-        cached = owner_cache.get(key)
-        if cached is not None:
-            return cached
+        entry = self.owners.get(key)
+        if entry is not None:
+            self.owners.move_to_end(key)
+            return entry
+        entry = self._build(gx, gy, h, w, cands, payload)
+        if self.last in self.owners:
+            n = _entry_nbytes(self.owners[self.last])
+            self.nbytes += n - self.sizes[self.last]
+            self.sizes[self.last] = n
+        self.owners[key] = entry
+        self.sizes[key] = entry[0].nbytes
+        self.nbytes += entry[0].nbytes
+        self.last = key
+        while self.nbytes > _OWNER_CACHE_BYTES and len(self.owners) > 1:
+            old, _ = self.owners.popitem(last=False)
+            self.nbytes -= self.sizes.pop(old)
+            self.preps.clear()
+        return entry
+
+    def _build(self, gx, gy, h, w, cands, payload):
+        g = self.g
         x0, y0 = g.tile_origin(gx, gy)
         tx1 = x0 + w * g.px_res
         ty1 = y0 + h * g.px_res
         xs = x0 + (np.arange(w) + 0.5) * g.px_res
         ys = y0 + (np.arange(h) + 0.5) * g.px_res
+        rings = payload.values.field("rings") if self.rmap is None else None
         # owner holds the DENSE candidate position (0..len(cands)-1), not
         # the layer-global ordinal: cands ascend by ordinal, so ascending
         # position overwrite preserves rasterize-last-wins, while the
@@ -122,7 +170,11 @@ def _make_driller(plugin: DrillSpec, g: GridSpec, rmap: dict | None = None):
         # slot scratch maps positions back to poly_ids for the output.
         owner = np.full((h, w), -1, dtype=np.int32)
         for pos, (ordinal, pid) in enumerate(cands):
-            prep = prep_cache[pid]
+            prep = self.preps.get(pid)
+            if prep is None:
+                prep = self.preps[pid] = geom.prepare(
+                    self.rmap[pid][1] if rings is None
+                    else rings[pos].as_py())
             bx0, by0, bx1, by1 = prep.bbox
             if bx1 <= x0 or bx0 >= tx1 or by1 <= y0 or by0 >= ty1:
                 continue
@@ -140,28 +192,15 @@ def _make_driller(plugin: DrillSpec, g: GridSpec, rmap: dict | None = None):
             sub = geom.contains_grid(prep, xs[j0:j1], ys[i0:i1])
             view = owner[i0:i1, j0:j1]
             view[sub] = pos
-        if len(owner_cache) >= 64:
-            owner_cache.clear()
-            # evict the prepared geometries AND candidate lists with the
-            # owners: adjacency makes footprint repeats contiguous, so
-            # needed entries re-insert lazily on the next row while a
-            # long task no longer accumulates one Prepared per distinct
-            # polygon it ever saw
-            prep_cache.clear()
-            cands_cache.clear()
-        entry = (owner, {"o2p": {i: pid
-                                 for i, (_, pid) in enumerate(cands)},
-                         "ords": list(range(len(cands)))})
-        owner_cache[key] = entry
-        return entry
+        return (owner, {"o2p": {i: pid for i, (_, pid) in enumerate(cands)},
+                        "ords": list(range(len(cands)))})
 
-    def drill_one(image_id, ts_idx, gx, gy, byts, h, w, fmt, cands, out):
+    def drill_one(self, image_id, ts_idx, byts, h, w, fmt, owner, scratch,
+                  out):
         """Drill one tile into the ``out`` chunk accumulator (see
-        ``_flush``).  ``cands`` is the ascending [(ordinal, poly_id)]
-        candidate list whose Prepared geometries are present in
-        ``prep_cache`` (guaranteed by ``cands_for`` / the caller)."""
+        ``_flush_arrow``) against its footprint's owner raster."""
+        plugin = self.plugin
         raw = plugin.decode(byts, h, w, fmt)
-        owner, scratch = owner_for(gx, gy, h, w, cands)
         ords = scratch["ords"]
         grouped = plugin.partials_grouped_raw(raw, owner, ords,
                                               scratch=scratch)
@@ -180,52 +219,23 @@ def _make_driller(plugin: DrillSpec, g: GridSpec, rmap: dict | None = None):
                                          dtype=_DTYPES[typ],
                                          count=len(vals)))
 
-    return drill_one, cands_for, owner_for, prep_cache
-
 
 _DTYPES = {"long": np.int64, "double": np.float64}
-_NS_PER_DAY = 86_400_000_000_000
+_US_PER_DAY = 86_400_000_000
+_EPOCH_US = int(np.datetime64(EPOCH, "us").astype(np.int64))
 
 
 def _empty_out(plugin: DrillSpec) -> dict:
     """Per-batch chunk accumulator: ``poly_id`` holds one id-list chunk
-    per tile, ``_meta`` one ``(image_id, ts_idx, n_rows)`` tuple per
-    tile, each partial field one small numpy array per tile.  ``_flush``
-    assembles the columns with ``np.repeat``/``concatenate`` — the
-    output build is vectorised instead of ~10 python appends per output
-    row (and no per-row ``pd.Timestamp`` objects)."""
+    per tile or time stack, ``_meta`` one ``(image_id, ts_idx, n_rows)``
+    tuple per tile, each partial field one small numpy array per tile or
+    stack.  ``_flush_arrow`` assembles the columns with
+    ``np.repeat``/``concatenate`` — the output build is vectorised
+    instead of ~10 python appends per output row."""
     out = {"poly_id": [], "_meta": []}
     for name, _ in plugin.partial_fields:
         out[name] = []
     return out
-
-
-def _flush(plugin: DrillSpec, out: dict) -> pd.DataFrame:
-    metas = out["_meta"]
-    fields = plugin.partial_fields
-    if not metas:
-        data = {"poly_id": np.empty(0, dtype=object),
-                "image_id": np.empty(0, dtype=object),
-                # pandas would infer float64 for an empty ts column,
-                # which Arrow cannot cast to timestamp — pin the dtype
-                "ts": np.empty(0, dtype="datetime64[ns]")}
-        for name, typ in fields:
-            data[name] = np.empty(0, dtype=_DTYPES[typ])
-        return pd.DataFrame(data)
-    counts = np.array([m[2] for m in metas])
-    ts_days = np.array([m[1] for m in metas], dtype=np.int64)
-    ts_vals = (np.datetime64(EPOCH, "ns")
-               + ts_days * np.timedelta64(_NS_PER_DAY, "ns"))
-    data = {
-        "poly_id": np.concatenate(
-            [np.asarray(c, dtype=object) for c in out["poly_id"]]),
-        "image_id": np.repeat(
-            np.array([m[0] for m in metas], dtype=object), counts),
-        "ts": np.repeat(ts_vals, counts),
-    }
-    for name, typ in fields:
-        data[name] = np.concatenate(out[name])
-    return pd.DataFrame(data)
 
 
 def attach_rings(fc: DataFrame, polygons: DataFrame,
@@ -417,147 +427,181 @@ def drill_partials(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
                 "image_id", r"_y(\d+)$", 1).cast("int"))
             .join(F.broadcast(fc), ["gx", "gy"]))
 
-    # Co-locate same-footprint tiles inside each partition: ownership
-    # (pixel -> polygon) is timestep-invariant per grid slot, so adjacent
-    # footprint repeats turn the per-tile rasterisation into a cache hit.
-    # Partition-local sort — no shuffle, tile bytes stay put.
-    work = work.sortWithinPartitions("gx", "gy")
-
     grid_b = sc.broadcast(grid)
     schema = plugin.partial_schema
 
     def run(batches):
         g: GridSpec = grid_b.value
         rmap = rings_b.value if rings_b is not None else None
-        driller = _make_driller(plugin, g, rmap)
+        driller = _Driller(plugin, g, rmap)
 
-        for rb in batches:
+        for window in _windows(batches):
             out = _empty_out(plugin)
-            _drill_rows_arrow(plugin, rb, driller, out)
+            _drill_rows_arrow(plugin, window, driller, out)
             yield _flush_arrow(plugin, out)
 
     return work.mapInArrow(run, schema=schema)
 
 
 def _flush_arrow(plugin: DrillSpec, out: dict):
-    """Arrow twin of :func:`_flush`: assemble the chunk accumulator
-    straight into a RecordBatch — no intermediate pandas frame, no
-    per-row object boxing on the way back to the JVM."""
+    """Assemble the chunk accumulator straight into a RecordBatch of the
+    plugin's ``partial_schema``: ``ts`` is built from the day indices as
+    ``timestamp[us, tz=UTC]`` (what Spark's Arrow verifier wants), and
+    per-tile ``image_id`` values are repeated Arrow-side."""
     import pyarrow as pa
 
-    pdf = _flush(plugin, out)
-    arrays = [pa.array(pdf["poly_id"], type=pa.string()),
-              pa.array(pdf["image_id"], type=pa.string()),
-              # naive datetime64 values are UTC wall times (session tz);
-              # Spark's arrow verifier wants timestamp[us, tz=UTC]
-              pa.array(pdf["ts"]).cast(pa.timestamp("us"))
-              .cast(pa.timestamp("us", tz="UTC"))]
+    metas = out["_meta"]
+    counts = np.fromiter((m[2] for m in metas), np.int64, len(metas))
+    days = np.fromiter((m[1] for m in metas), np.int64, len(metas))
+    rows = np.repeat(np.arange(len(metas)), counts)
+
+    def cat(chunks, dtype):
+        return np.concatenate(chunks) if chunks else np.empty(0, dtype)
+
+    arrays = [pa.array(cat(out["poly_id"], object), pa.string()),
+              pa.array([m[0] for m in metas], pa.string()).take(rows),
+              pa.array(_EPOCH_US + days[rows] * _US_PER_DAY,
+                       pa.timestamp("us", tz="UTC"))]
     names = ["poly_id", "image_id", "ts"]
     for name, typ in plugin.partial_fields:
-        arrays.append(pa.array(pdf[name]))
+        arrays.append(pa.array(cat(out[name], _DTYPES[typ])))
         names.append(name)
     return pa.RecordBatch.from_arrays(arrays, names)
 
 
-def _drill_rows_arrow(plugin: DrillSpec, rb, driller, out: dict) -> None:
-    """Drill every row of one pyarrow RecordBatch into ``out``.
+def _windows(batches):
+    """Consecutive Arrow batches in the lists the drill UDF groups and
+    flushes together.  A list is handed on as soon as its rows average
+    ``_MIN_STACK`` tiles per footprint — batches of already clustered
+    rows go one by one, so the kernel keeps overlapping the scan — or
+    once it holds ``_WINDOW_BYTES`` (a time-major split)."""
+    window, size, rows, slots = [], 0, 0, set()
+    for rb in batches:
+        window.append(rb)
+        size += rb.nbytes
+        rows += rb.num_rows
+        slots.update(zip(rb.column("gx").to_pylist(),
+                         rb.column("gy").to_pylist()))
+        if rows >= _MIN_STACK * len(slots) or size >= _WINDOW_BYTES:
+            yield window
+            window, size, rows, slots = [], 0, 0, set()
+    if window:
+        yield window
 
-    Rows arrive grouped by footprint (the partition-local sort / the
-    cogroup key), so consecutive same-(slot, shape, fmt) runs form a
-    TIME STACK fed to the plugin's batch kernel
-    (``partials_grouped_raw_batch``) — per-tile python/numpy dispatch is
-    paid once per run, not once per tile.  Rows in any other
-    configuration (lossy codecs, multiband plugins, malformed ids) take
-    the unchanged per-tile ``drill_one`` path; both paths are
-    bit-identical (golden-tested).
 
-    The payload column stays in the Arrow buffer: a consecutive run of
-    same-shape fmt='raw' tiles is a CONTIGUOUS byte region there, so
-    the (T, h*w) time stack the plugin kernel wants is a zero-copy
-    reshape of that region — no per-row bytes objects, no pandas
-    materialisation of 16 KB cells (measured ~40% of the old per-tile
-    boundary cost).  Non-contiguous / non-raw rows fall back to the
-    per-tile path on materialised bytes."""
+def _drill_rows_arrow(plugin: DrillSpec, batches: list, driller: _Driller,
+                      out: dict, payload=None) -> None:
+    """Drill every row of a list of consecutive pyarrow RecordBatches
+    into ``out``.
+
+    Rows arrive in storage order: nothing upstream sorts them.  A stable
+    argsort on (gx, gy, h, w, fmt) over all rows of the list groups the
+    same-footprint rows into TIME STACKS fed to the plugin's batch
+    kernel (``partials_grouped_raw_batch``) — per-tile python/numpy
+    dispatch is paid once per stack, not once per tile.  Rows in any
+    other configuration (lossy codecs, multiband plugins, malformed ids
+    or payload lengths) take the per-tile ``drill_one`` path; both paths
+    are bit-identical (golden-tested).
+
+    The payload column stays in the Arrow buffers: a stack whose rows
+    are adjacent in one batch (a footprint's timesteps stored together,
+    or a cogroup group) is a CONTIGUOUS byte region there, so the
+    (T, h*w) stack the kernel wants is a zero-copy reshape of that
+    region; an interleaved stack is gathered with ``np.stack``.
+
+    ``payload`` is a candidate payload shared by every row (a cogroup
+    group's one candidate row); by default each row carries its own in
+    the ``cand_polys`` column."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    drill_one, cands_for, owner_for, _ = driller
-    n = rb.num_rows
-    if not n:
+    batches = [rb for rb in batches if rb.num_rows]
+    if not batches:
         return
-    cols = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
-    iids = cols["image_id"].to_pylist()
-    gxs = cols["gx"].to_numpy()
-    gys = cols["gy"].to_numpy()
-    hs = cols["h"].to_numpy()
-    ws = cols["w"].to_numpy()
-    fmts = cols["fmt"].to_pylist()
-    cand_col = cols["cand_polys"]
-    bcol = cols["bytes"]
-    if isinstance(bcol, pa.ChunkedArray):
-        bcol = bcol.combine_chunks()
-    if pa.types.is_large_binary(bcol.type):
-        off_dt = np.int64
-    else:
-        off_dt = np.int32
-    bufs = bcol.buffers()
-    offs = np.frombuffer(bufs[1], dtype=off_dt)[
-        bcol.offset:bcol.offset + len(bcol) + 1]
-    data = np.frombuffer(bufs[2], dtype=np.uint8)
+
+    def column(name):
+        return pa.chunked_array([rb.column(name) for rb in batches])
+
+    iids = column("image_id").to_pylist()
+    gxs = column("gx").to_numpy()
+    gys = column("gy").to_numpy()
+    hs = column("h").to_numpy()
+    ws = column("w").to_numpy()
+    fmt_col = column("fmt")
+    fmts = fmt_col.to_pylist()
+    fcodes = pc.index_in(fmt_col, value_set=pc.unique(fmt_col)).to_numpy()
+    # row -> (batch, byte start, byte length) of its payload
+    datas, starts, lens, cand_cols = [], [], [], []
+    for rb in batches:
+        bcol = rb.column("bytes")
+        off_dt = (np.int64 if pa.types.is_large_binary(bcol.type)
+                  else np.int32)
+        bufs = bcol.buffers()
+        offs = np.frombuffer(bufs[1], dtype=off_dt)[
+            bcol.offset:bcol.offset + len(bcol) + 1].astype(np.int64)
+        datas.append(np.frombuffer(bufs[2], dtype=np.uint8))
+        starts.append(offs[:-1])
+        lens.append(np.diff(offs))
+        if payload is None:
+            cand_cols.append(rb.column("cand_polys"))
+    bidx = np.repeat(np.arange(len(batches)),
+                     [rb.num_rows for rb in batches])
+    first = np.cumsum([0] + [rb.num_rows for rb in batches])
+    starts = np.concatenate(starts)
+    lens = np.concatenate(lens)
     fields = plugin.partial_fields
-    i = 0
-    while i < n:
-        j = i + 1
-        while (j < n and gxs[j] == gxs[i] and gys[j] == gys[i]
-               and hs[j] == hs[i] and ws[j] == ws[i]
-               and fmts[j] == fmts[i]):
-            j += 1
+    order = np.lexsort((fcodes, ws, hs, gys, gxs))
+    keys = np.stack([gxs, gys, hs, ws, fcodes]).astype(np.int64)[:, order]
+    cuts = np.flatnonzero((keys[:, 1:] != keys[:, :-1]).any(axis=0)) + 1
+    for rows in np.split(order, cuts):
+        i = int(rows[0])
         gx, gy = int(gxs[i]), int(gys[i])
         h, w, fmt = int(hs[i]), int(ws[i]), fmts[i]
-        cands = cands_for(gx, gy, cand_col[i].as_py())
         metas = []
-        rows = []
-        for k in range(i, j):
+        keep = []
+        for k in rows.tolist():
             iid = iids[k]
             cut = iid.find("_")
             if cut < 2 or iid[0] != "t" or not iid[1:cut].isdigit():
                 continue
             metas.append((iid, int(iid[1:cut])))
-            rows.append(k)
-        if metas and fmt == "raw":
-            sz = h * w
-            contiguous = (len(rows) == j - i
-                          and int(offs[j]) - int(offs[i]) == sz * (j - i))
-            if contiguous:
-                raws2d = data[offs[i]:offs[j]].reshape(j - i, sz)
+            keep.append(k)
+        if not metas:
+            continue
+        pl = (payload if payload is not None
+              else cand_cols[bidx[i]][int(i - first[bidx[i]])])
+        cands = driller.cands_for(gx, gy, pl)
+        owner, scratch = driller.owner_for(gx, gy, h, w, cands, pl)
+        keep = np.asarray(keep)
+        sz = h * w
+        if fmt == "raw" and np.all(lens[keep] == sz):
+            a, b = int(keep[0]), int(keep[-1])
+            if b - a + 1 == len(keep) and bidx[a] == bidx[b]:
+                s0 = starts[a]
+                raws2d = datas[bidx[a]][s0:s0 + sz * len(keep)].reshape(
+                    len(keep), sz)
             else:
-                raws2d = np.stack(
-                    [data[offs[k]:offs[k + 1]] for k in rows]) \
-                    if all(offs[k + 1] - offs[k] == sz for k in rows) \
-                    else None
-            if raws2d is not None:
-                owner, scratch = owner_for(gx, gy, h, w, cands)
-                res = plugin.partials_grouped_raw_batch(
-                    raws2d, owner, scratch=scratch)
-                if res is not None:
-                    ords_out = res[0]
-                    if ords_out:
-                        o2p = scratch["o2p"]
-                        pids = np.array([o2p[o] for o in ords_out],
-                                        dtype=object)
-                        out["poly_id"].append(np.tile(pids, len(metas)))
-                        for iid, ts_idx in metas:
-                            out["_meta"].append((iid, ts_idx,
-                                                 len(ords_out)))
-                        for (name, typ), arr in zip(fields, res[1:]):
-                            out[name].append(np.ascontiguousarray(
-                                arr, dtype=_DTYPES[typ]).ravel())
-                    i = j
-                    continue
-        for k, (iid, ts_idx) in zip(rows, metas):
-            drill_one(iid, ts_idx, gx, gy,
-                      data[offs[k]:offs[k + 1]].tobytes(), h, w, fmt,
-                      cands, out)
-        i = j
+                raws2d = np.stack([datas[bidx[k]][starts[k]:starts[k] + sz]
+                                   for k in keep])
+            res = plugin.partials_grouped_raw_batch(raws2d, owner,
+                                                    scratch=scratch)
+            if res is not None:
+                ords_out = res[0]
+                if ords_out:
+                    o2p = scratch["o2p"]
+                    pids = np.array([o2p[o] for o in ords_out],
+                                    dtype=object)
+                    out["poly_id"].append(np.tile(pids, len(metas)))
+                    for iid, ts_idx in metas:
+                        out["_meta"].append((iid, ts_idx, len(ords_out)))
+                    for (name, typ), arr in zip(fields, res[1:]):
+                        out[name].append(np.ascontiguousarray(
+                            arr, dtype=_DTYPES[typ]).ravel())
+                continue
+        for k, (iid, ts_idx) in zip(keep, metas):
+            byts = datas[bidx[k]][starts[k]:starts[k] + lens[k]].tobytes()
+            driller.drill_one(iid, ts_idx, byts, h, w, fmt, owner, scratch,
+                              out)
 
 
 def drill(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
@@ -621,9 +665,15 @@ def write_tiles_bucketed(tiles: DataFrame, table: str, n_buckets: int = 64,
     10^12-image scale the image table is laid out by grid slot anyway).
 
     ``n_time_buckets`` splits each grid slot's time series across ``tb``
-    groups so a cogroup group (one pandas frame in the drill UDF) holds
+    groups so a cogroup group (one Arrow table in the drill UDF) holds
     1/n_time_buckets of a slot's timesteps — size the groups to executor
-    memory for deep time stacks."""
+    memory for deep time stacks.
+
+    Each bucket is stored sorted by (gx, gy, tb) (``write_bucketed``):
+    that sort, not one at drill time, keeps cogrouped stacks contiguous.
+    The cogroup's own sort on the key meets presorted input and hands
+    each group's tiles to the UDF as adjacent rows, so every time stack
+    is a zero-copy view of the Arrow payload buffer."""
     from .tables import write_bucketed
 
     t = with_slot_keys(tiles, n_time_buckets)
@@ -716,29 +766,14 @@ def drill_partials_cogrouped(tiles: DataFrame, polygons: DataFrame,
         import pyarrow as pa
 
         if "d" not in holder:
-            holder["d"] = _make_driller(plugin, grid_b.value)
-        drill_one, _, owner_for, prep_cache = holder["d"]
+            holder["d"] = _Driller(plugin, grid_b.value)
         out = _empty_out(plugin)
         if ltab.num_rows and rtab.num_rows:
-            # one candidate row per group: rings decoded from Arrow once
-            # per (footprint, time bucket), reused for every tile row.
-            # Preps are (re)inserted once per group — the only point an
-            # eviction can strike is inside the first row's owner build,
-            # after which this group's preps are no longer needed.
-            cands = []
-            for c in rtab.column("cand_polys")[0].as_py():
-                ordinal, pid = int(c["ordinal"]), c["poly_id"]
-                if pid not in prep_cache:
-                    prep_cache[pid] = geom.prepare(c["rings"])
-                cands.append((ordinal, pid))
-            # a cogroup group IS one grid slot's time stack — the shared
-            # row driver feeds it to the plugin's stacked kernel
-            # zero-copy from the Arrow buffers (per-tile fallback inside)
-            driller = (drill_one, lambda gx, gy, payload: cands,
-                       owner_for, prep_cache)
-            for rb in ltab.combine_chunks().to_batches():
-                rb = rb.append_column("cand_polys", pa.nulls(rb.num_rows))
-                _drill_rows_arrow(plugin, rb, driller, out)
+            # a cogroup group IS one grid slot's time stack, with one
+            # candidate row: its payload serves every tile row
+            payload = rtab.column("cand_polys")[0]
+            _drill_rows_arrow(plugin, ltab.to_batches(), holder["d"], out,
+                              payload)
         return pa.Table.from_batches([_flush_arrow(plugin, out)])
 
     return (left.groupBy(*keys)

@@ -336,3 +336,167 @@ def test_drill_empty_input(tiles, polygons, grid, empty, partial):
     assert got.count() == 0
     assert [(f.name, f.dataType) for f in got.schema] == \
         [(f.name, f.dataType) for f in ref.schema]
+
+
+@pytest.mark.parametrize("rings", ["dim", "join"])
+def test_drill_result_independent_of_tile_order(tiles, polygons, grid, polys,
+                                                tiles_pdf, c3_result, rings):
+    """Nothing sorts the tiles before the drill UDF, so a time-major and a
+    shuffled tile order (interleaved footprints inside each Arrow batch)
+    must drill to the default-order result — exactly, for the integer
+    counts of waterbodies_c3 — and to the oracle."""
+    from pyspark.sql import functions as F
+
+    orders = {"time-major": tiles.orderBy("image_id"),
+              "shuffled": tiles.orderBy(F.rand(7)).repartition(3)}
+    c3 = get_plugin("waterbodies_c3")
+    sum_wet = get_plugin("sum_wet")
+    base = c3_result.sort_values(["poly_id", "ts"]).reset_index(drop=True)
+    exp_c3 = oracle.oracle_drill(grid, polys, tiles_pdf, c3, partial=True)
+    exp_sw = oracle.oracle_drill(grid, polys, tiles_pdf, sum_wet,
+                                 partial=False)
+    for name, t in orders.items():
+        got = (drill_op.drill(t, polygons, c3, grid, rings=rings)
+               .toPandas().sort_values(["poly_id", "ts"])
+               .reset_index(drop=True))
+        pd.testing.assert_frame_equal(got, base, obj=name)
+        _compare(got, exp_c3, ["px_wet", "pc_wet", "pc_missing"])
+        got = drill_op.drill(t, polygons, sum_wet, grid, rings=rings,
+                             partial=False).toPandas()
+        assert len(got) == len(exp_sw) > 0
+        _compare(got, exp_sw, ["water"])
+
+
+def _tile_batch(rows, cands):
+    """An Arrow batch shaped like the drill UDF's input: ``rows`` are
+    (image_id, bytes, w, h, fmt, gx, gy) tuples; every row carries the
+    id-only candidate list ``cands[(gx, gy)]``."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[0], pa.string()), pa.array(cols[1], pa.binary()),
+         pa.array(cols[2], pa.int32()), pa.array(cols[3], pa.int32()),
+         pa.array(cols[4], pa.string()), pa.array(cols[5], pa.int32()),
+         pa.array(cols[6], pa.int32()),
+         pa.array([cands[(r[5], r[6])] for r in rows],
+                  pa.list_(pa.string()))],
+        ["image_id", "bytes", "w", "h", "fmt", "gx", "gy", "cand_polys"])
+
+
+def test_interleaved_batch_stacks_once_per_footprint(grid, polys, tiles_pdf):
+    """A batch holding footprints A, B, A, B, A feeds the batch kernel
+    once per footprint (T=3 and T=2), and its output equals the per-tile
+    ``drill_one`` path row for row."""
+    from dea_conflux_spark import datagen
+    from dea_conflux_spark.plugins.waterbodies import WaterbodiesC3
+
+    stacks = []
+
+    class Spy(WaterbodiesC3):
+        def partials_grouped_raw_batch(self, raws2d, owner, scratch=None):
+            stacks.append(raws2d.shape[0])
+            return super().partials_grouped_raw_batch(raws2d, owner,
+                                                      scratch=scratch)
+
+    owned = oracle.oracle_assignments(grid, polys)
+    (ax, ay), (bx, by) = list(dict.fromkeys(
+        zip(owned["gx"], owned["gy"])))[:2]
+    pdf = tiles_pdf.set_index("image_id")
+    order = [(0, ax, ay), (0, bx, by), (1, ax, ay), (1, bx, by),
+             (2, ax, ay)]
+    rows = []
+    for t, gx, gy in order:
+        iid = datagen.image_id(t, gx, gy)
+        r = pdf.loc[iid]
+        rows.append((iid, r["bytes"], int(r["w"]), int(r["h"]), r["fmt"],
+                     gx, gy))
+    ids = [p["poly_id"] for p in polys]
+    rb = _tile_batch(rows, {(ax, ay): ids, (bx, by): ids})
+    rmap = {p["poly_id"]: (p["ordinal"], p["rings"]) for p in polys}
+
+    plugin = Spy()
+    out = drill_op._empty_out(plugin)
+    drill_op._drill_rows_arrow(plugin, [rb], drill_op._Driller(plugin, grid,
+                                                               rmap), out)
+    assert sorted(stacks) == [2, 3]
+
+    ref = drill_op._Driller(plugin, grid, rmap)
+    want = drill_op._empty_out(plugin)
+    for k, (iid, byts, w, h, fmt, gx, gy) in enumerate(rows):
+        payload = rb.column(7)[k]
+        cands = ref.cands_for(gx, gy, payload)
+        owner, scratch = ref.owner_for(gx, gy, h, w, cands, payload)
+        ref.drill_one(iid, int(iid[1:5]), byts, h, w, fmt, owner, scratch,
+                      want)
+    assert sorted(stacks) == [2, 3]  # the reference path never stacks
+
+    def frame(o):
+        return (drill_op._flush_arrow(plugin, o).to_pandas()
+                .sort_values(["image_id", "poly_id"])
+                .reset_index(drop=True))
+
+    got, exp = frame(out), frame(want)
+    assert len(got) > 0 and set(got["image_id"]) == {r[0] for r in rows}
+    pd.testing.assert_frame_equal(got, exp)
+
+
+def test_owner_built_once_per_footprint_per_task(monkeypatch):
+    """A task that meets more than 64 footprints cyclically, for 3 rounds
+    (a time-major split), builds each footprint's owner exactly once."""
+    from collections import Counter
+
+    from dea_conflux_spark import datagen
+    from dea_conflux_spark.core import geom
+
+    g = datagen.GridSpec(G=9, T=3, w=16, h=16)
+    rmap, cands = {}, {}
+    for gx in range(g.G):
+        for gy in range(g.G):
+            x0, y0 = g.tile_origin(gx, gy)
+            x1, y1 = x0 + g.tile_span_x / 2, y0 + g.tile_span_y / 2
+            pid = f"p{gx}_{gy}"
+            rmap[pid] = (len(rmap), [[[x0, y0], [x1, y0], [x1, y1],
+                                      [x0, y1]]])
+            cands[(gx, gy)] = [pid]
+    assert len(cands) > 64
+
+    builds = Counter()
+    contains_grid = geom.contains_grid
+
+    def counting(prep, xs, ys):
+        builds[(float(xs[0]), float(ys[0]))] += 1
+        return contains_grid(prep, xs, ys)
+
+    monkeypatch.setattr(geom, "contains_grid", counting)
+    plugin = get_plugin("waterbodies_c3")
+    driller = drill_op._Driller(plugin, g, rmap)
+    raw = bytes(g.w * g.h)
+    rows = [(datagen.image_id(t, gx, gy), raw, g.w, g.h, "raw", gx, gy)
+            for t in range(g.T) for gx, gy in cands]
+    out = drill_op._empty_out(plugin)
+    for k in range(0, len(rows), 50):
+        drill_op._drill_rows_arrow(plugin, [_tile_batch(rows[k:k + 50],
+                                                        cands)],
+                                   driller, out)
+    assert len(builds) == len(cands)
+    assert set(builds.values()) == {1}
+    # every tile drilled: one output row per tile (one polygon each)
+    assert sum(m[2] for m in out["_meta"]) == len(rows)
+
+
+def test_windows_group_short_stacks_only():
+    """Batches whose rows already stack (one footprint per batch) are
+    drilled one by one; batches of one row per footprint (a time-major
+    split) are held together until they average 16 tiles per footprint."""
+    from dea_conflux_spark import datagen
+
+    raw = bytes(4)
+    slots = [(gx, gy) for gx in range(3) for gy in range(3)]
+    cands = {s: [] for s in slots}
+    clustered = [_tile_batch([(datagen.image_id(t, *s), raw, 2, 2, "raw", *s)
+                              for t in range(20)], cands) for s in slots]
+    assert [len(w) for w in drill_op._windows(iter(clustered))] == [1] * 9
+    scenes = [_tile_batch([(datagen.image_id(t, *s), raw, 2, 2, "raw", *s)
+                           for s in slots], cands) for t in range(40)]
+    assert [len(w) for w in drill_op._windows(iter(scenes))] == [16, 16, 8]

@@ -69,6 +69,27 @@ def main():
                 ok = ok and "bytes#" not in b
         return ok
 
+    def below(p, node):
+        """Tree lines of the subtree under the first ``node`` line of a
+        formatted plan's tree header."""
+        tree = p.split("\n\n")[0].splitlines()
+        for k, line in enumerate(tree):
+            if node in line:
+                depth = line.index(node)
+                sub = []
+                for ln in tree[k + 1:]:
+                    m = re.search(r"[A-Za-z]", ln)
+                    if m is None or m.start() <= depth:
+                        break
+                    sub.append(ln)
+                return sub
+        return None
+
+    def no_sort_below_partials(p):
+        sub = below(p, "MapInArrow")
+        return sub is not None and not any(
+            re.search(r"\bSort \(\d+\)", ln) for ln in sub)
+
     check("final agg is hash aggregate on (poly_id, ts)",
           re.search(r"Keys \[2\]: \[poly_id#\d+, ts#\d+\]", plan))
     check("broadcast exchanges present (cover/candidates/flags)",
@@ -80,6 +101,11 @@ def main():
           not re.search(r"Exchange[^\n]*bytes", plan))
     check("partials stage is Arrow-batched (MapInArrow)",
           "MapInArrow" in plan)
+    check("no Sort below the partials MapInArrow, default and "
+          "rings='join' plans: tiles stream from the scan through the "
+          "candidate join into the UDF (footprints are grouped per window "
+          "of Arrow batches)",
+          no_sort_below_partials(plan) and no_sort_below_partials(join_plan))
     check("default plan has no MapInPandas: the edge-flag tables are "
           "prepared at construction (local relations), so an action runs "
           "no flag pass", "MapInPandas" not in plan)
