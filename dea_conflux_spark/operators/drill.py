@@ -18,13 +18,13 @@ Spark-first re-expression of the reference's scene drill
    the UDF exactly once, never once per polygon.  Nothing sorts them:
    the scan streams through the join into the UDF in storage order.
 4. drill UDF (``mapInArrow``, Arrow batches) — group the rows of each
-   window of consecutive batches by footprint into time stacks, decode
-   tiles, run the plugin's vectorized kernel, assign pixels to polygons
-   by exact ray-cast PIP on pixel centres with ascending-ordinal
-   overwrite (matching rasterio last-wins, reference drill.py:85-90; one
-   owner raster per footprint, kept for the whole task), and emit
-   per-(polygon, tile) **partial aggregates** — pixels never leave the
-   task.
+   batch by footprint into time stacks, decode tiles, run the plugin's
+   vectorized kernel, assign pixels to polygons by exact ray-cast PIP on
+   pixel centres with ascending-ordinal overwrite (matching rasterio
+   last-wins, reference drill.py:85-90; one owner raster per footprint,
+   cached for the task, or on the ``rings="dim"`` path for every task a
+   Python worker runs of the drill), and emit per-(polygon, tile)
+   **partial aggregates** — pixels never leave the task.
 5. final combine — native ``groupBy(poly_id, ts).agg`` (codegen'd partial →
    final, the reference's per-polygon summarise loop drill.py:675-686).
 6. optional edge-direction flags (reference drill.py:604-616, 697-703):
@@ -34,6 +34,7 @@ Spark-first re-expression of the reference's scene drill
 
 from __future__ import annotations
 
+import uuid
 from collections import OrderedDict
 
 import numpy as np
@@ -50,64 +51,70 @@ from .tilecells import extents_by_ts, tile_cells, tile_meta
 FLAG_COLS = ["conflux_n", "conflux_s", "conflux_e", "conflux_w"]
 
 
-# Owner-cache budget of one task: bytes of owner rasters plus the
-# arrays plugins memoize in their scratch.  A task at the package's 16m
-# scan split holds at most 16 MiB of one-byte pixels, and a footprint's
-# owner with its scratch takes 4-17 bytes per pixel on the flagship
-# layer (median 5.5: int32 owner, bool selector, then index and gather
-# order of the assigned pixels), so even a split of distinct, fully
-# covered footprints stays resident.
-_OWNER_CACHE_BYTES = 17 * (16 << 20)
+# Owner-cache charge per pixel of a footprint: its int32 owner raster
+# plus the arrays plugins memoize in its scratch (bool selector, then
+# index and gather order of the assigned pixels) take 4-17 bytes per
+# pixel on the flagship layer, median 5.5.  The cache budget is this
+# charge times the session's scan split (``_owner_budget``): a task
+# reads about a split of one-byte pixels, so even a split of distinct,
+# fully covered footprints stays resident, whatever the split size.
+_OWNER_BYTES_PER_PX = 17
 
-# The drill UDF groups rows by footprint across consecutive Arrow
-# batches until they average _MIN_STACK tiles per footprint or hold
-# _WINDOW_BYTES: a time-major split (each batch one or two scenes) then
-# still forms time stacks of ~16 tiles at 128x128 px instead of 1-2
-# (the stacked kernel costs ~55 us/tile at T=1 and ~20 us/tile from
-# T=32), while clustered batches are drilled as they arrive.
-_MIN_STACK = 16
-_WINDOW_BYTES = 64 << 20
+# The drill state of the last drill a Python worker ran, by drill token
+# (``_worker_driller``).  Workers are reused across tasks
+# (``spark.python.worker.reuse``), so one task's owners serve the next
+# task and the next action of the same drill.
+_WORKER: dict = {}
 
 
-def _entry_nbytes(entry) -> int:
-    """Array bytes of an owner-cache entry: the owner raster plus the
-    numpy arrays in its scratch (top level or inside a tuple)."""
-    owner, scratch = entry
-    n = owner.nbytes
-    for v in scratch.values():
-        for x in (v if isinstance(v, tuple) else (v,)):
-            if isinstance(x, np.ndarray):
-                n += x.nbytes
-    return n
+def _owner_budget(spark) -> int:
+    """Owner-cache budget in bytes for the session's scan split
+    (``spark.sql.files.maxPartitionBytes``)."""
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return _OWNER_BYTES_PER_PX * int(split)
+
+
+def _worker_driller(token, make) -> "_Driller":
+    """The worker's driller for drill ``token``: kept from the worker's
+    last task when that task was of the same drill, else made by
+    ``make()``.  A ``None`` token (geometry not fixed at construction)
+    gets a fresh driller per task."""
+    if token is None:
+        return make()
+    d = _WORKER.get(token)
+    if d is None:
+        _WORKER.clear()
+        d = _WORKER[token] = make()
+    return d
 
 
 class _Driller:
-    """Per-task drill state shared by both execution paths (the joined
-    stream ``mapInArrow`` and the cogrouped ``applyInArrow``).
+    """Drill state shared by both execution paths (the joined stream
+    ``mapInArrow`` and the cogrouped ``applyInArrow``), for one task or,
+    on the ``rings="dim"`` path, for every task a worker runs of one
+    drill.
 
     * candidate lists (``cands_for``) — the candidate payload is the same
-      for every timestep of a footprint, so it is decoded once per task
-      into ascending ``[(ordinal, poly_id)]``.
+      for every timestep of a footprint, so it is decoded once into
+      ascending ``[(ordinal, poly_id)]``.
     * owner rasters (``owner_for``) — the pixel->polygon assignment
       depends only on the footprint geometry and candidate set, so every
       timestep of a grid slot reuses it.  Tiles stream in storage order,
       and a time-major task meets each footprint again on every
-      timestep, so the cache is an LRU bounded by ``_OWNER_CACHE_BYTES``
-      (sized to keep every footprint of a task) that evicts one
-      footprint at a time.  An entry's size is measured again at the
-      next build, once the kernel has filled its scratch.
+      timestep, so the cache is an LRU holding up to ``budget`` bytes,
+      charged ``_OWNER_BYTES_PER_PX`` per footprint pixel, that evicts
+      one footprint at a time.
     * prepared geometry — built only inside an owner build, where
       neighbouring footprints share it; a cached owner no longer needs
       it, so it is dropped whenever the owner cache evicts."""
 
-    def __init__(self, plugin: DrillSpec, g: GridSpec,
-                 rmap: dict | None = None):
+    def __init__(self, plugin: DrillSpec, g: GridSpec, rmap: dict | None,
+                 budget: int):
         self.plugin, self.g, self.rmap = plugin, g, rmap
+        self.budget = budget
         self.cands: dict = {}
         self.owners: OrderedDict = OrderedDict()
-        self.sizes: dict = {}
         self.nbytes = 0
-        self.last = None
         self.preps: dict = {}
 
     def cands_for(self, gx, gy, payload):
@@ -138,18 +145,12 @@ class _Driller:
         if entry is not None:
             self.owners.move_to_end(key)
             return entry
-        entry = self._build(gx, gy, h, w, cands, payload)
-        if self.last in self.owners:
-            n = _entry_nbytes(self.owners[self.last])
-            self.nbytes += n - self.sizes[self.last]
-            self.sizes[self.last] = n
-        self.owners[key] = entry
-        self.sizes[key] = entry[0].nbytes
-        self.nbytes += entry[0].nbytes
-        self.last = key
-        while self.nbytes > _OWNER_CACHE_BYTES and len(self.owners) > 1:
-            old, _ = self.owners.popitem(last=False)
-            self.nbytes -= self.sizes.pop(old)
+        entry = self.owners[key] = self._build(gx, gy, h, w, cands,
+                                                payload)
+        self.nbytes += _OWNER_BYTES_PER_PX * h * w
+        while self.nbytes > self.budget and len(self.owners) > 1:
+            (_, _, oh, ow), _ = self.owners.popitem(last=False)
+            self.nbytes -= _OWNER_BYTES_PER_PX * oh * ow
             self.preps.clear()
         return entry
 
@@ -429,15 +430,18 @@ def drill_partials(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
 
     grid_b = sc.broadcast(grid)
     schema = plugin.partial_schema
+    budget = _owner_budget(tiles.sparkSession)
+    # dim-path geometry is fixed by the broadcast, so a worker's owners
+    # stay valid for every task and action of this drill
+    token = uuid.uuid4().hex if rings_b is not None else None
 
     def run(batches):
-        g: GridSpec = grid_b.value
-        rmap = rings_b.value if rings_b is not None else None
-        driller = _Driller(plugin, g, rmap)
-
-        for window in _windows(batches):
+        driller = _worker_driller(token, lambda: _Driller(
+            plugin, grid_b.value,
+            rings_b.value if rings_b is not None else None, budget))
+        for rb in batches:
             out = _empty_out(plugin)
-            _drill_rows_arrow(plugin, window, driller, out)
+            _drill_rows_arrow(plugin, rb, driller, out)
             yield _flush_arrow(plugin, out)
 
     return work.mapInArrow(run, schema=schema)
@@ -469,33 +473,12 @@ def _flush_arrow(plugin: DrillSpec, out: dict):
     return pa.RecordBatch.from_arrays(arrays, names)
 
 
-def _windows(batches):
-    """Consecutive Arrow batches in the lists the drill UDF groups and
-    flushes together.  A list is handed on as soon as its rows average
-    ``_MIN_STACK`` tiles per footprint — batches of already clustered
-    rows go one by one, so the kernel keeps overlapping the scan — or
-    once it holds ``_WINDOW_BYTES`` (a time-major split)."""
-    window, size, rows, slots = [], 0, 0, set()
-    for rb in batches:
-        window.append(rb)
-        size += rb.nbytes
-        rows += rb.num_rows
-        slots.update(zip(rb.column("gx").to_pylist(),
-                         rb.column("gy").to_pylist()))
-        if rows >= _MIN_STACK * len(slots) or size >= _WINDOW_BYTES:
-            yield window
-            window, size, rows, slots = [], 0, 0, set()
-    if window:
-        yield window
-
-
-def _drill_rows_arrow(plugin: DrillSpec, batches: list, driller: _Driller,
-                      out: dict, payload=None) -> None:
-    """Drill every row of a list of consecutive pyarrow RecordBatches
-    into ``out``.
+def _drill_rows_arrow(plugin: DrillSpec, rb, driller: _Driller, out: dict,
+                      payload=None) -> None:
+    """Drill every row of one pyarrow RecordBatch into ``out``.
 
     Rows arrive in storage order: nothing upstream sorts them.  A stable
-    argsort on (gx, gy, h, w, fmt) over all rows of the list groups the
+    argsort on (gx, gy, h, w, fmt) over the batch groups the
     same-footprint rows into TIME STACKS fed to the plugin's batch
     kernel (``partials_grouped_raw_batch``) — per-tile python/numpy
     dispatch is paid once per stack, not once per tile.  Rows in any
@@ -503,11 +486,11 @@ def _drill_rows_arrow(plugin: DrillSpec, batches: list, driller: _Driller,
     or payload lengths) take the per-tile ``drill_one`` path; both paths
     are bit-identical (golden-tested).
 
-    The payload column stays in the Arrow buffers: a stack whose rows
-    are adjacent in one batch (a footprint's timesteps stored together,
-    or a cogroup group) is a CONTIGUOUS byte region there, so the
-    (T, h*w) stack the kernel wants is a zero-copy reshape of that
-    region; an interleaved stack is gathered with ``np.stack``.
+    The payload column stays in the Arrow buffer: a stack whose rows are
+    adjacent (a footprint's timesteps stored together, or a cogroup
+    group) is a CONTIGUOUS byte region there, so the (T, h*w) stack the
+    kernel wants is a zero-copy reshape of that region; an interleaved
+    stack is gathered with ``np.stack``.
 
     ``payload`` is a candidate payload shared by every row (a cogroup
     group's one candidate row); by default each row carries its own in
@@ -515,40 +498,27 @@ def _drill_rows_arrow(plugin: DrillSpec, batches: list, driller: _Driller,
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    batches = [rb for rb in batches if rb.num_rows]
-    if not batches:
+    n = rb.num_rows
+    if not n:
         return
-
-    def column(name):
-        return pa.chunked_array([rb.column(name) for rb in batches])
-
-    iids = column("image_id").to_pylist()
-    gxs = column("gx").to_numpy()
-    gys = column("gy").to_numpy()
-    hs = column("h").to_numpy()
-    ws = column("w").to_numpy()
-    fmt_col = column("fmt")
+    iids = rb.column("image_id").to_pylist()
+    gxs = rb.column("gx").to_numpy()
+    gys = rb.column("gy").to_numpy()
+    hs = rb.column("h").to_numpy()
+    ws = rb.column("w").to_numpy()
+    fmt_col = rb.column("fmt")
     fmts = fmt_col.to_pylist()
     fcodes = pc.index_in(fmt_col, value_set=pc.unique(fmt_col)).to_numpy()
-    # row -> (batch, byte start, byte length) of its payload
-    datas, starts, lens, cand_cols = [], [], [], []
-    for rb in batches:
-        bcol = rb.column("bytes")
-        off_dt = (np.int64 if pa.types.is_large_binary(bcol.type)
-                  else np.int32)
-        bufs = bcol.buffers()
-        offs = np.frombuffer(bufs[1], dtype=off_dt)[
-            bcol.offset:bcol.offset + len(bcol) + 1].astype(np.int64)
-        datas.append(np.frombuffer(bufs[2], dtype=np.uint8))
-        starts.append(offs[:-1])
-        lens.append(np.diff(offs))
-        if payload is None:
-            cand_cols.append(rb.column("cand_polys"))
-    bidx = np.repeat(np.arange(len(batches)),
-                     [rb.num_rows for rb in batches])
-    first = np.cumsum([0] + [rb.num_rows for rb in batches])
-    starts = np.concatenate(starts)
-    lens = np.concatenate(lens)
+    # row -> byte start and length of its payload
+    bcol = rb.column("bytes")
+    off_dt = np.int64 if pa.types.is_large_binary(bcol.type) else np.int32
+    bufs = bcol.buffers()
+    offs = np.frombuffer(bufs[1], dtype=off_dt)[
+        bcol.offset:bcol.offset + n + 1].astype(np.int64)
+    data = np.frombuffer(bufs[2], dtype=np.uint8)
+    starts = offs[:-1]
+    lens = np.diff(offs)
+    cand_col = rb.column("cand_polys") if payload is None else None
     fields = plugin.partial_fields
     order = np.lexsort((fcodes, ws, hs, gys, gxs))
     keys = np.stack([gxs, gys, hs, ws, fcodes]).astype(np.int64)[:, order]
@@ -568,20 +538,17 @@ def _drill_rows_arrow(plugin: DrillSpec, batches: list, driller: _Driller,
             keep.append(k)
         if not metas:
             continue
-        pl = (payload if payload is not None
-              else cand_cols[bidx[i]][int(i - first[bidx[i]])])
+        pl = payload if payload is not None else cand_col[i]
         cands = driller.cands_for(gx, gy, pl)
         owner, scratch = driller.owner_for(gx, gy, h, w, cands, pl)
         keep = np.asarray(keep)
         sz = h * w
         if fmt == "raw" and np.all(lens[keep] == sz):
-            a, b = int(keep[0]), int(keep[-1])
-            if b - a + 1 == len(keep) and bidx[a] == bidx[b]:
-                s0 = starts[a]
-                raws2d = datas[bidx[a]][s0:s0 + sz * len(keep)].reshape(
-                    len(keep), sz)
+            if keep[-1] - keep[0] + 1 == len(keep):
+                s0 = starts[keep[0]]
+                raws2d = data[s0:s0 + sz * len(keep)].reshape(len(keep), sz)
             else:
-                raws2d = np.stack([datas[bidx[k]][starts[k]:starts[k] + sz]
+                raws2d = np.stack([data[starts[k]:starts[k] + sz]
                                    for k in keep])
             res = plugin.partials_grouped_raw_batch(raws2d, owner,
                                                     scratch=scratch)
@@ -599,7 +566,7 @@ def _drill_rows_arrow(plugin: DrillSpec, batches: list, driller: _Driller,
                             arr, dtype=_DTYPES[typ]).ravel())
                 continue
         for k, (iid, ts_idx) in zip(keep, metas):
-            byts = datas[bidx[k]][starts[k]:starts[k] + lens[k]].tobytes()
+            byts = data[starts[k]:starts[k] + lens[k]].tobytes()
             driller.drill_one(iid, ts_idx, byts, h, w, fmt, owner, scratch,
                               out)
 
@@ -760,20 +727,21 @@ def drill_partials_cogrouped(tiles: DataFrame, polygons: DataFrame,
 
     grid_b = spark.sparkContext.broadcast(grid)
     schema = plugin.partial_schema
-    holder: dict = {}  # per-python-worker drill state across groups
+    budget = _owner_budget(spark)
+    holder: dict = {}  # per-task drill state across groups
 
     def run_cg(ltab, rtab):
         import pyarrow as pa
 
         if "d" not in holder:
-            holder["d"] = _Driller(plugin, grid_b.value)
+            holder["d"] = _Driller(plugin, grid_b.value, None, budget)
         out = _empty_out(plugin)
         if ltab.num_rows and rtab.num_rows:
             # a cogroup group IS one grid slot's time stack, with one
             # candidate row: its payload serves every tile row
             payload = rtab.column("cand_polys")[0]
-            _drill_rows_arrow(plugin, ltab.to_batches(), holder["d"], out,
-                              payload)
+            for rb in ltab.combine_chunks().to_batches():
+                _drill_rows_arrow(plugin, rb, holder["d"], out, payload)
         return pa.Table.from_batches([_flush_arrow(plugin, out)])
 
     return (left.groupBy(*keys)

@@ -417,11 +417,10 @@ def test_interleaved_batch_stacks_once_per_footprint(grid, polys, tiles_pdf):
 
     plugin = Spy()
     out = drill_op._empty_out(plugin)
-    drill_op._drill_rows_arrow(plugin, [rb], drill_op._Driller(plugin, grid,
-                                                               rmap), out)
+    drill_op._drill_rows_arrow(plugin, rb, _driller(plugin, grid, rmap), out)
     assert sorted(stacks) == [2, 3]
 
-    ref = drill_op._Driller(plugin, grid, rmap)
+    ref = _driller(plugin, grid, rmap)
     want = drill_op._empty_out(plugin)
     for k, (iid, byts, w, h, fmt, gx, gy) in enumerate(rows):
         payload = rb.column(7)[k]
@@ -441,9 +440,14 @@ def test_interleaved_batch_stacks_once_per_footprint(grid, polys, tiles_pdf):
     pd.testing.assert_frame_equal(got, exp)
 
 
-def test_owner_built_once_per_footprint_per_task(monkeypatch):
-    """A task that meets more than 64 footprints cyclically, for 3 rounds
-    (a time-major split), builds each footprint's owner exactly once."""
+def _driller(plugin, grid, rmap, budget=17 << 24):
+    return drill_op._Driller(plugin, grid, rmap, budget)
+
+
+def _cycle_builds(monkeypatch, budget):
+    """Owner builds per footprint when one driller with ``budget`` meets
+    81 footprints of 16x16 px cyclically for 3 rounds (a time-major
+    split), in Arrow batches of 50 rows."""
     from collections import Counter
 
     from dea_conflux_spark import datagen
@@ -459,7 +463,6 @@ def test_owner_built_once_per_footprint_per_task(monkeypatch):
             rmap[pid] = (len(rmap), [[[x0, y0], [x1, y0], [x1, y1],
                                       [x0, y1]]])
             cands[(gx, gy)] = [pid]
-    assert len(cands) > 64
 
     builds = Counter()
     contains_grid = geom.contains_grid
@@ -470,33 +473,62 @@ def test_owner_built_once_per_footprint_per_task(monkeypatch):
 
     monkeypatch.setattr(geom, "contains_grid", counting)
     plugin = get_plugin("waterbodies_c3")
-    driller = drill_op._Driller(plugin, g, rmap)
+    driller = _driller(plugin, g, rmap, budget)
     raw = bytes(g.w * g.h)
     rows = [(datagen.image_id(t, gx, gy), raw, g.w, g.h, "raw", gx, gy)
             for t in range(g.T) for gx, gy in cands]
     out = drill_op._empty_out(plugin)
     for k in range(0, len(rows), 50):
-        drill_op._drill_rows_arrow(plugin, [_tile_batch(rows[k:k + 50],
-                                                        cands)],
+        drill_op._drill_rows_arrow(plugin, _tile_batch(rows[k:k + 50], cands),
                                    driller, out)
-    assert len(builds) == len(cands)
-    assert set(builds.values()) == {1}
     # every tile drilled: one output row per tile (one polygon each)
     assert sum(m[2] for m in out["_meta"]) == len(rows)
+    return builds
 
 
-def test_windows_group_short_stacks_only():
-    """Batches whose rows already stack (one footprint per batch) are
-    drilled one by one; batches of one row per footprint (a time-major
-    split) are held together until they average 16 tiles per footprint."""
-    from dea_conflux_spark import datagen
+def test_owner_built_once_per_footprint_per_task(monkeypatch):
+    """A task that meets more than 64 footprints cyclically, for 3 rounds
+    (a time-major split), builds each footprint's owner exactly once."""
+    builds = _cycle_builds(monkeypatch, 17 << 24)
+    assert len(builds) == 81 > 64
+    assert set(builds.values()) == {1}
 
-    raw = bytes(4)
-    slots = [(gx, gy) for gx in range(3) for gy in range(3)]
-    cands = {s: [] for s in slots}
-    clustered = [_tile_batch([(datagen.image_id(t, *s), raw, 2, 2, "raw", *s)
-                              for t in range(20)], cands) for s in slots]
-    assert [len(w) for w in drill_op._windows(iter(clustered))] == [1] * 9
-    scenes = [_tile_batch([(datagen.image_id(t, *s), raw, 2, 2, "raw", *s)
-                           for s in slots], cands) for t in range(40)]
-    assert [len(w) for w in drill_op._windows(iter(scenes))] == [16, 16, 8]
+
+def test_owner_budget_follows_scan_split(spark, monkeypatch):
+    """The owner cache holds 17 bytes per pixel of the session's scan
+    split.  81 footprints of 256 px outgrow it at a 16 KiB split (64
+    footprints), so the cycle rebuilds owners; at a 32 KiB split they fit
+    and each owner is built once, whatever the number of rounds."""
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "16k")
+        small = drill_op._owner_budget(spark)
+        spark.conf.set(key, "32k")
+        large = drill_op._owner_budget(spark)
+    finally:
+        spark.conf.set(key, saved)
+    assert (small, large) == (17 << 14, 17 << 15)
+    assert sum(_cycle_builds(monkeypatch, small).values()) > 81
+    builds = _cycle_builds(monkeypatch, large)
+    assert len(builds) == 81 and set(builds.values()) == {1}
+
+
+def test_worker_driller_kept_per_drill(monkeypatch):
+    """A Python worker keeps one drill's driller across tasks, replaces it
+    when a task of another drill arrives, and never keeps a driller whose
+    drill has no token."""
+    monkeypatch.setattr(drill_op, "_WORKER", {})
+    made = []
+
+    def make():
+        made.append(object())
+        return made[-1]
+
+    first = drill_op._worker_driller("a", make)
+    assert drill_op._worker_driller("a", make) is first
+    assert drill_op._worker_driller("b", make) is not first
+    assert drill_op._worker_driller("a", make) is not first
+    assert drill_op._worker_driller(None, make) is made[-1]
+    assert drill_op._worker_driller(None, make) is made[-1]
+    assert len(made) == 5 and list(drill_op._WORKER) == ["a"]

@@ -103,8 +103,8 @@ def main():
           "MapInArrow" in plan)
     check("no Sort below the partials MapInArrow, default and "
           "rings='join' plans: tiles stream from the scan through the "
-          "candidate join into the UDF (footprints are grouped per window "
-          "of Arrow batches)",
+          "candidate join into the UDF (footprints are grouped per Arrow "
+          "batch)",
           no_sort_below_partials(plan) and no_sort_below_partials(join_plan))
     check("default plan has no MapInPandas: the edge-flag tables are "
           "prepared at construction (local relations), so an action runs "
