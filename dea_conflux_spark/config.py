@@ -74,6 +74,15 @@ def get_spark(app: str = "dea-conflux-spark", cpus: int | str | None = None,
         # 512 rows keeps cached batches ~8 MB
         .config("spark.sql.inMemoryColumnarStorage.batchSize", "512")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # G1 grows the driver heap toward -Xmx while drill actions allocate
+        # tile copies fast, though the live set stays far smaller; shrinking
+        # the heap after each marking cycle hands the free part back.
+        # perfbench, 2g heap, 4 vCPUs: drill_wit peak RSS about 2.9 -> 2.2
+        # GB, for about 30 ms more GC pause per flagship action.  Set as
+        # "default" options so a caller's own extraJavaOptions add to them
+        # instead of replacing them.
+        .config("spark.driver.defaultJavaOptions",
+                "-XX:MinHeapFreeRatio=10 -XX:MaxHeapFreeRatio=30")
         .config("spark.python.worker.reuse", "true")
         .config("spark.python.worker.idleTimeoutSeconds", "300")
         .config("spark.ui.enabled", "false")

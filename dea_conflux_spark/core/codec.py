@@ -100,6 +100,19 @@ def decode_bands(data: bytes, h: int, w: int, spec: list) -> dict:
     return out
 
 
+def band_planes(stack: np.ndarray, size: int, spec: list) -> dict:
+    """Batch :func:`decode_bands` without a copy: ``{name: (T, size)
+    view}`` over a (T, n) uint8 stack of T :func:`encode_bands` payloads
+    of ``size`` pixels each (n must be the spec's full byte length)."""
+    out = {}
+    off = 0
+    for name, dt in spec:
+        n = size * np.dtype(dt).itemsize
+        out[name] = stack[:, off:off + n].view(dt)
+        off += n
+    return out
+
+
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     a = np.asarray(a, dtype=np.float64)
     b = np.asarray(b, dtype=np.float64)

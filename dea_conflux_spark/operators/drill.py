@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import uuid
 from collections import OrderedDict
+from itertools import compress
 
 import numpy as np
 import pandas as pd
@@ -481,14 +482,19 @@ def _drill_rows_arrow(plugin: DrillSpec, rb, driller: _Driller, out: dict,
     argsort on (gx, gy, h, w, fmt) over the batch groups the
     same-footprint rows into TIME STACKS fed to the plugin's batch
     kernel (``partials_grouped_raw_batch``) — per-tile python/numpy
-    dispatch is paid once per stack, not once per tile.  Rows in any
-    other configuration (lossy codecs, multiband plugins, malformed ids
-    or payload lengths) take the per-tile ``drill_one`` path; both paths
-    are bit-identical (golden-tested).
+    dispatch is paid once per stack, not once per tile.  The plugin
+    declares the payloads its kernel takes (``stack_nbytes``: a format
+    and a byte length per tile shape), so a group is stacked whatever
+    its format; rows of any other format or length (a lossy codec, a
+    truncated payload) and every row of a plugin without a kernel take
+    the per-tile ``drill_one`` path.  The two paths agree exactly on
+    every count (golden-tested); see the kernel contract for the one
+    float exception.  Rows whose ``image_id`` does not parse are
+    skipped.
 
     The payload column stays in the Arrow buffer: a stack whose rows are
     adjacent (a footprint's timesteps stored together, or a cogroup
-    group) is a CONTIGUOUS byte region there, so the (T, h*w) stack the
+    group) is a CONTIGUOUS byte region there, so the (T, n) stack the
     kernel wants is a zero-copy reshape of that region; an interleaved
     stack is gathered with ``np.stack``.
 
@@ -519,7 +525,6 @@ def _drill_rows_arrow(plugin: DrillSpec, rb, driller: _Driller, out: dict,
     starts = offs[:-1]
     lens = np.diff(offs)
     cand_col = rb.column("cand_polys") if payload is None else None
-    fields = plugin.partial_fields
     order = np.lexsort((fcodes, ws, hs, gys, gxs))
     keys = np.stack([gxs, gys, hs, ws, fcodes]).astype(np.int64)[:, order]
     cuts = np.flatnonzero((keys[:, 1:] != keys[:, :-1]).any(axis=0)) + 1
@@ -542,33 +547,43 @@ def _drill_rows_arrow(plugin: DrillSpec, rb, driller: _Driller, out: dict,
         cands = driller.cands_for(gx, gy, pl)
         owner, scratch = driller.owner_for(gx, gy, h, w, cands, pl)
         keep = np.asarray(keep)
-        sz = h * w
-        if fmt == "raw" and np.all(lens[keep] == sz):
-            if keep[-1] - keep[0] + 1 == len(keep):
-                s0 = starts[keep[0]]
-                raws2d = data[s0:s0 + sz * len(keep)].reshape(len(keep), sz)
-            else:
-                raws2d = np.stack([data[starts[k]:starts[k] + sz]
-                                   for k in keep])
-            res = plugin.partials_grouped_raw_batch(raws2d, owner,
-                                                    scratch=scratch)
-            if res is not None:
-                ords_out = res[0]
-                if ords_out:
-                    o2p = scratch["o2p"]
-                    pids = np.array([o2p[o] for o in ords_out],
-                                    dtype=object)
-                    out["poly_id"].append(np.tile(pids, len(metas)))
-                    for iid, ts_idx in metas:
-                        out["_meta"].append((iid, ts_idx, len(ords_out)))
-                    for (name, typ), arr in zip(fields, res[1:]):
-                        out[name].append(np.ascontiguousarray(
-                            arr, dtype=_DTYPES[typ]).ravel())
-                continue
+        nb = plugin.stack_nbytes(fmt, h, w)
+        fit = (lens[keep] == nb if nb is not None
+               else np.zeros(len(keep), dtype=bool))
+        if fit.any() and _drill_stack(plugin, data, starts, nb, keep[fit],
+                                      list(compress(metas, fit)), owner,
+                                      scratch, out):
+            keep, metas = keep[~fit], list(compress(metas, ~fit))
         for k, (iid, ts_idx) in zip(keep, metas):
             byts = data[starts[k]:starts[k] + lens[k]].tobytes()
             driller.drill_one(iid, ts_idx, byts, h, w, fmt, owner, scratch,
                               out)
+
+
+def _drill_stack(plugin: DrillSpec, data, starts, nb: int, rows, metas,
+                 owner, scratch: dict, out: dict) -> bool:
+    """Feed the rows ``rows`` (payloads of ``nb`` bytes each, one
+    footprint) to the plugin's batch kernel as one (T, nb) stack; False
+    when the kernel declines it."""
+    if rows[-1] - rows[0] + 1 == len(rows):
+        s0 = starts[rows[0]]
+        raws2d = data[s0:s0 + nb * len(rows)].reshape(len(rows), nb)
+    else:
+        raws2d = np.stack([data[starts[k]:starts[k] + nb] for k in rows])
+    res = plugin.partials_grouped_raw_batch(raws2d, owner, scratch=scratch)
+    if res is None:
+        return False
+    ords_out = res[0]
+    if ords_out:
+        o2p = scratch["o2p"]
+        pids = np.array([o2p[o] for o in ords_out], dtype=object)
+        out["poly_id"].append(np.tile(pids, len(rows)))
+        for iid, ts_idx in metas:
+            out["_meta"].append((iid, ts_idx, len(ords_out)))
+        for (name, typ), arr in zip(plugin.partial_fields, res[1:]):
+            out[name].append(np.ascontiguousarray(
+                arr, dtype=_DTYPES[typ]).ravel())
+    return True
 
 
 def drill(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,

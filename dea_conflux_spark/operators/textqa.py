@@ -398,12 +398,13 @@ def bm25_topk(docs: DataFrame, query_terms=BM25_QUERY_TERMS, k: int = 10,
     if not terms:
         return docs.select("doc_id", F.lit(0.0).alias("score"),
                            F.lit(1).alias("rnk")).limit(0)
-    toksc = tokens_col(F.col("text"))
-    row = once(ensure_spread(docs).select(
-        "doc_id", F.size(toksc).alias("dl"),
-        F.array(*[
-            F.size(F.filter(toksc, lambda t: t == F.lit(term)))
-            for term in terms]).alias("tfs")))
+    # the token array is projected once; dl and every tf read that column
+    toks = F.col("toks")
+    row = once(ensure_spread(docs)
+               .select("doc_id", tokens_col(F.col("text")).alias("toks"))
+               .select("doc_id", F.size(toks).alias("dl"), F.array(*[
+                   F.size(F.filter(toks, lambda t: t == F.lit(term)))
+                   for term in terms]).alias("tfs")))
     stats = row.agg(
         F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"),
         *[F.sum((F.col("tfs")[i] > 0).cast("long")).alias(f"df_{i}")

@@ -75,6 +75,23 @@ def full_tile_segment(size: int, seg_list: list):
     return None
 
 
+def segment_arrays(lo: int, seg_list: list, scratch: dict | None = None):
+    """``(starts, lens, ords_out)``: the :func:`owner_segments` slices as
+    ``np.add.reduceat`` wants them — segment start and length arrays and
+    the segments' owner values (``lo`` added back).  Every segment is
+    non-empty, so ``reduceat`` never meets the repeated-index case.
+    Memoized in the per-slot ``scratch`` like the segments themselves."""
+    sa = scratch.get("segarrs") if scratch is not None else None
+    if sa is None:
+        n = len(seg_list)
+        sa = (np.fromiter((a for _, a, _ in seg_list), np.int64, n),
+              np.fromiter((b - a for _, a, b in seg_list), np.int64, n),
+              [o + lo for o, _, _ in seg_list])
+        if scratch is not None:
+            scratch["segarrs"] = sa
+    return sa
+
+
 class DrillSpec:
     """A drill plugin.
 
@@ -150,25 +167,39 @@ class DrillSpec:
         the generic path (default)."""
         return None
 
+    def stack_nbytes(self, fmt: str, h: int, w: int) -> int | None:
+        """The payloads :meth:`partials_grouped_raw_batch` accepts: the
+        byte length of one (h, w) tile of format ``fmt`` it can take in a
+        stack, or ``None`` when it takes no stack of that format (the
+        default).  The drill stacks only rows of exactly this length;
+        every other row takes the per-tile path, whose decode raises on
+        a malformed payload."""
+        return None
+
     def partials_grouped_raw_batch(self, raws2d: np.ndarray,
                                    owner: np.ndarray,
                                    scratch: dict | None = None):
         """Optional TIME-STACK hot path: grouped partials for EVERY tile
-        of one grid slot at once.  ``raws2d`` is the (T, h*w) uint8
-        stack of T same-footprint tiles (fmt='raw' payloads); the owner
-        raster — and therefore the per-ordinal segment layout — is
-        shared by all T rows, so each per-segment count runs as ONE
-        numpy reduction over the whole stack instead of T separate
-        calls (the per-tile path pays ~1-3 us of python/numpy dispatch
-        per segment per tile, which dominates the drill UDF once the
-        owner cache is hot).
+        of one grid slot at once.  ``raws2d`` is the (T, n) uint8 stack
+        of T same-footprint payloads, each of the format and the
+        ``n = stack_nbytes(fmt, h, w)`` bytes the plugin declares; the
+        owner raster — and therefore the per-ordinal segment layout — is
+        shared by all T rows, so each per-segment reduction runs as ONE
+        numpy call over the whole stack instead of T separate calls (the
+        per-tile path pays ~1-3 us of python/numpy dispatch per segment
+        per tile, which dominates the drill UDF once the owner cache is
+        hot).
 
         Returns ``(ordinals_out, field_arrays...)`` with one (T, n_ords)
-        int array per ``partial_fields`` entry — row t = tile t of the
+        array per ``partial_fields`` entry — row t = tile t of the
         stack, column k = ``ordinals_out[k]`` — or ``None`` to use the
-        per-tile path.  MUST be bit-identical to
-        ``partials_grouped_raw`` applied per row (the drill's golden
-        tests hold both paths to the same oracle)."""
+        per-tile path.  Every field MUST be bit-identical to
+        ``transform()`` + ``partials_grouped()`` applied per row (the
+        drill's golden tests hold both paths to the same oracle), with
+        one documented exception: a float sum of per-pixel ``x / 100``
+        values may come back as the exact integer sum divided by 100
+        (within ~1e-15 relative of the per-pixel float sum; the WIT
+        ``sum_pv``/``sum_npv``/``sum_bs``)."""
         return None
 
     def final_aggs(self):

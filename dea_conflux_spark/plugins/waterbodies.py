@@ -88,6 +88,9 @@ class WaterbodiesC3(DrillSpec):
                          int(cnz(wet[a:b])))
                 for o, a, b in segs}
 
+    def stack_nbytes(self, fmt, h, w):
+        return h * w if fmt == "raw" else None
+
     def partials_grouped_raw_batch(self, raws2d, owner, scratch=None):
         # time-stack variant of partials_grouped_raw: one classify pass
         # + one reduceat per count over ALL T tiles of the slot.  Same
@@ -109,15 +112,7 @@ class WaterbodiesC3(DrillSpec):
             n_px = np.full((T, 1), n, dtype=np.int64)
             return ([o + lo], n_px, (n - n_ok)[:, None].astype(np.int64),
                     n_wet[:, None].astype(np.int64))
-        sa = scratch.get("segarrs") if scratch is not None else None
-        if sa is None:
-            sa = (np.fromiter((a for _, a, _ in segs), np.int64, len(segs)),
-                  np.fromiter((b - a for _, a, b in segs), np.int64,
-                              len(segs)),
-                  [o + lo for o, _, _ in segs])
-            if scratch is not None:
-                scratch["segarrs"] = sa
-        starts, lens, ords_out = sa
+        starts, lens, ords_out = base.segment_arrays(lo, segs, scratch)
         sub = raws2d[:, gix]
         wofl = sub & 0b11110011
         wet = wofl == 128

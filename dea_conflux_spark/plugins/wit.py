@@ -41,6 +41,17 @@ _TCW = {"nbart_blue": 0.0315, "nbart_green": 0.2021, "nbart_red": 0.3102,
 
 OUT_BANDS = ["pv", "npv", "bs", "wet", "water"]
 
+# bytes one pixel takes in a multiraw payload (all ten planes)
+_NBYTES_PER_PX = sum(np.dtype(dt).itemsize for _, dt in WIT_BANDS)
+# gathered pixels the time-stack kernel classifies per step
+_CHUNK_PX = 1 << 16
+
+
+def _tcw(bands: dict):
+    """Tasseled Cap Wetness in float64, terms in ``_TCW`` order — the
+    kernel and ``transform`` share it, so their ``wet`` is bit-identical."""
+    return sum(c * bands[b].astype(np.float64) for b, c in _TCW.items())
+
 
 class WitLs9(DrillSpec):
     name = "wit_ls9"
@@ -62,7 +73,7 @@ class WitLs9(DrillSpec):
         return codec.decode_bands(data, h, w, WIT_BANDS)
 
     def transform(self, raw: dict) -> dict:
-        tcw = sum(c * raw[b].astype(np.float64) for b, c in _TCW.items())
+        tcw = _tcw(raw)
         mask = (raw["water"] & 0b01100011) == 0
         open_water = (raw["water"] & (1 << 7)) > 0
         wet = np.where(mask, tcw, np.nan) > -350
@@ -108,6 +119,47 @@ class WitLs9(DrillSpec):
         return {o + lo: (int(n_px[o]), int(n_mask[o]),
                          *[float(s[o]) for s in sums])
                 for o in nz}
+
+    def stack_nbytes(self, fmt, h, w):
+        return _NBYTES_PER_PX * h * w if fmt == "multiraw" else None
+
+    def partials_grouped_raw_batch(self, raws2d, owner, scratch=None):
+        # time-stack path: each band gathered once through the owner
+        # segments, one classify and two reduceats per chunk of about
+        # _CHUNK_PX gathered pixels (bounds the float64 temporaries and
+        # keeps them cache-sized).  n_px/n_mask/sum_wet/sum_water are the
+        # per-tile counts exactly; sum_pv/npv/bs are the exact integer
+        # sums / 100 (the per-tile path adds the x/100 values one by one).
+        oi = base.owner_index(owner, scratch)
+        if not oi:
+            return ([],)
+        gix, segs = base.owner_segments(oi, scratch)
+        starts, lens, ords_out = base.segment_arrays(oi[2], segs, scratch)
+        full = base.full_tile_segment(owner.size, segs) is not None
+        T = raws2d.shape[0]
+        counts = np.empty((3, T, len(starts)), np.int64)
+        fc_sums = np.empty((3, T, len(starts)), np.int64)
+        step = max(1, _CHUNK_PX // gix.size)
+        for t in range(0, T, step):
+            planes = codec.band_planes(raws2d[t:t + step], owner.size,
+                                       WIT_BANDS)
+            if not full:
+                planes = {b: np.take(p, gix, axis=1)
+                          for b, p in planes.items()}
+            water = planes["water"]
+            mask = (water & 0b01100011) == 0
+            open_water = (water & (1 << 7)) > 0
+            wet = mask & (_tcw(planes) > -350)
+            land = mask & ~open_water
+            np.add.reduceat(np.stack([mask, wet & land, mask & open_water]),
+                            starts, axis=2, dtype=np.int64,
+                            out=counts[:, t:t + step])
+            fc = np.stack([planes[b] for b in ("pv", "npv", "bs")])
+            np.add.reduceat(fc * (land & ~wet), starts, axis=2,
+                            dtype=np.int64, out=fc_sums[:, t:t + step])
+        return (ords_out, np.broadcast_to(lens, (T, len(lens))), counts[0],
+                *(fc_sums / 100.0), counts[1].astype(np.float64),
+                counts[2].astype(np.float64))
 
     def final_aggs(self):
         from pyspark.sql import functions as F

@@ -81,6 +81,98 @@ class TestWaterbodiesBatchKernel:
         self._check(raws, owner, h, w)
 
 
+WIT_PLUGINS = ["wit_ls9", "wit_ls8", "wit_ls7", "wit_ls5"]
+
+
+class TestWitBatchKernel:
+    """The WIT time-stack kernel over a (T, 16*h*w) multiraw stack must
+    equal ``transform`` + ``partials_grouped`` applied per row: every
+    count exactly, the float sums within rtol 1e-12 (they are exact
+    integer sums / 100, not sums of per-pixel x / 100)."""
+
+    def _stack(self, rng, T, h, w):
+        from dea_conflux_spark.core import codec
+        from dea_conflux_spark.plugins.wit import WIT_BANDS
+
+        rows = []
+        for _ in range(T):
+            water = rng.integers(0, 256, (h, w), dtype=np.uint8)
+            # most pixels clear (mask bits off), half of them open water
+            water[rng.random((h, w)) < 0.8] &= 0b10011100
+            bands = {"water": water}
+            for name, dt in WIT_BANDS:
+                if dt == "i2":  # straddles the TCW threshold of -350
+                    bands[name] = rng.normal(600.0, 350.0,
+                                             (h, w)).astype(np.int16)
+            for name in ("bs", "pv", "npv"):
+                bands[name] = rng.integers(0, 121, (h, w), dtype=np.uint8)
+            rows.append(np.frombuffer(codec.encode_bands(bands, WIT_BANDS),
+                                      np.uint8))
+        return np.stack(rows)
+
+    def _check(self, name, raws2d, owner):
+        plugin = get_plugin(name)
+        h, w = owner.shape
+        assert plugin.stack_nbytes("multiraw", h, w) == raws2d.shape[1]
+        res = plugin.partials_grouped_raw_batch(raws2d, owner, scratch={})
+        assert res is not None
+        ords_out = list(res[0])
+        ords = sorted({int(o) for o in np.unique(owner) if o >= 0})
+        assert ords_out == ords
+        for t in range(raws2d.shape[0]):
+            raw = plugin.decode(raws2d[t].tobytes(), h, w, "multiraw")
+            want = plugin.partials_grouped(plugin.transform(raw), owner,
+                                           ords, scratch={})
+            assert list(want) == ords_out
+            for k, o in enumerate(ords_out):
+                got = [a[t][k] for a in res[1:]]
+                for (field, typ), g, e in zip(plugin.partial_fields, got,
+                                              want[o]):
+                    if typ == "long" or field in ("sum_wet", "sum_water"):
+                        assert g == e, (t, o, field)
+                    else:
+                        np.testing.assert_allclose(
+                            g, e, rtol=1e-12, atol=0, err_msg=field)
+        return res
+
+    @pytest.mark.parametrize("name", WIT_PLUGINS)
+    def test_multi_owner_stack(self, rng, name):
+        # 24 tiles of ~3.6k gathered px span more than one kernel chunk
+        h = w = 64
+        owner = _random_owner(rng, h, w, n_cands=7, lo=2)
+        res = self._check(name, self._stack(rng, 24, h, w), owner)
+        assert len(res[0]) == 7
+        assert res[3].sum() > 0 and res[6].sum() > 0  # sum_pv, sum_wet
+
+    @pytest.mark.parametrize("name", WIT_PLUGINS)
+    def test_single_owner_full_tile(self, rng, name):
+        h = w = 16
+        owner = np.full((h, w), 4, dtype=np.int32)
+        res = self._check(name, self._stack(rng, 5, h, w), owner)
+        assert list(res[0]) == [4]
+        assert (np.asarray(res[1]) == h * w).all()
+
+    @pytest.mark.parametrize("name", WIT_PLUGINS)
+    def test_no_assigned_pixels(self, rng, name):
+        h = w = 8
+        owner = np.full((h, w), -1, dtype=np.int32)
+        plugin = get_plugin(name)
+        res = plugin.partials_grouped_raw_batch(self._stack(rng, 3, h, w),
+                                                owner, scratch={})
+        assert res == ([],)
+
+    @pytest.mark.parametrize("name", WIT_PLUGINS)
+    def test_single_row_stack(self, rng, name):
+        h = w = 16
+        owner = _random_owner(rng, h, w, n_cands=3)
+        self._check(name, self._stack(rng, 1, h, w), owner)
+
+    def test_declares_multiraw_only(self):
+        plugin = get_plugin("wit_ls9")
+        assert plugin.stack_nbytes("multiraw", 4, 8) == 16 * 4 * 8
+        assert plugin.stack_nbytes("raw", 4, 8) is None
+
+
 class TestAssignNearestBitExact:
     """The Arrow nearest-centroid assignment must reproduce the
     higher-order-function expressions' sequential IEEE fold bit for bit

@@ -180,6 +180,23 @@ def test_codec_raw_roundtrip():
     assert (codec.decode(codec.encode(a, "raw"), 64, 64, "raw") == a).all()
 
 
+def test_codec_band_planes_match_decode_bands():
+    spec = [("a", "u1"), ("b", "i2"), ("c", "u1")]
+    tiles = [{"a": RNG.integers(0, 256, (3, 5), dtype=np.uint8),
+              "b": RNG.integers(-999, 999, (3, 5)).astype(np.int16),
+              "c": RNG.integers(0, 256, (3, 5), dtype=np.uint8)}
+             for _ in range(4)]
+    stack = np.stack([np.frombuffer(codec.encode_bands(t, spec), np.uint8)
+                      for t in tiles])
+    planes = codec.band_planes(stack, 15, spec)
+    for k, t in enumerate(tiles):
+        dec = codec.decode_bands(stack[k].tobytes(), 3, 5, spec)
+        for name, _ in spec:
+            assert planes[name].dtype == dec[name].dtype
+            assert (planes[name][k].reshape(3, 5) == dec[name]).all()
+            assert (dec[name] == t[name]).all()
+
+
 def test_codec_dct_psnr():
     # smooth-ish natural image: sum of sinusoids + mild noise
     y, x = np.mgrid[0:64, 0:64]

@@ -440,6 +440,124 @@ def test_interleaved_batch_stacks_once_per_footprint(grid, polys, tiles_pdf):
     pd.testing.assert_frame_equal(got, exp)
 
 
+class _WitSpy:
+    """A wit_ls9 whose batch kernel records each stack's depth, and a
+    hook on ``_Driller.drill_one`` that records each per-tile image id."""
+
+    def __init__(self, monkeypatch):
+        from dea_conflux_spark.plugins.wit import WitLs9
+
+        self.stacks, self.per_tile = [], []
+        spy = self
+
+        class Spy(WitLs9):
+            def partials_grouped_raw_batch(self, raws2d, owner,
+                                           scratch=None):
+                spy.stacks.append(raws2d.shape[0])
+                return super().partials_grouped_raw_batch(
+                    raws2d, owner, scratch=scratch)
+
+        drill_one = drill_op._Driller.drill_one
+
+        def recording(driller, image_id, *args):
+            spy.per_tile.append(image_id)
+            return drill_one(driller, image_id, *args)
+
+        monkeypatch.setattr(drill_op._Driller, "drill_one", recording)
+        self.plugin = Spy()
+
+
+def _wit_batch(grid, polys, order, cut=None):
+    """(Arrow batch, rows) of WIT tiles at ``order`` = [(t, gx, gy)], each
+    row listing every polygon as a candidate; ``cut`` = (row, n) drops
+    the last n bytes of that row's payload."""
+    from dea_conflux_spark import datagen
+
+    preps = datagen.prepare_polys(polys)
+    rows = []
+    for k, (t, gx, gy) in enumerate(order):
+        r = datagen.wit_tile_row(grid, t, gx, gy, preps)
+        byts = r["bytes"]
+        if cut is not None and cut[0] == k:
+            byts = byts[:-cut[1]]
+        rows.append((r["image_id"], byts, grid.w, grid.h, "multiraw", gx,
+                     gy))
+    ids = [p["poly_id"] for p in polys]
+    return _tile_batch(rows, {(gx, gy): ids for _, gx, gy in order}), rows
+
+
+def _two_footprints(grid, polys):
+    owned = oracle.oracle_assignments(grid, polys)
+    return list(dict.fromkeys(zip(owned["gx"], owned["gy"])))[:2]
+
+
+def test_multiraw_batch_stacks_once_per_footprint(grid, polys,
+                                                   monkeypatch):
+    """A batch of WIT ``multiraw`` tiles holding footprints A, B, A, B, A
+    reaches the WIT batch kernel once per footprint (T=3 and T=2) and
+    never the per-tile path; its partials equal the per-tile path's, the
+    counts exactly and the float sums within rtol 1e-12."""
+    (ax, ay), (bx, by) = _two_footprints(grid, polys)
+    rb, rows = _wit_batch(grid, polys, [(0, ax, ay), (0, bx, by),
+                                        (1, ax, ay), (1, bx, by),
+                                        (2, ax, ay)])
+    rmap = {p["poly_id"]: (p["ordinal"], p["rings"]) for p in polys}
+    spy = _WitSpy(monkeypatch)
+    plugin = spy.plugin
+    out = drill_op._empty_out(plugin)
+    drill_op._drill_rows_arrow(plugin, rb, _driller(plugin, grid, rmap), out)
+    assert sorted(spy.stacks) == [2, 3]
+    assert spy.per_tile == []
+
+    ref = _driller(plugin, grid, rmap)
+    want = drill_op._empty_out(plugin)
+    for k, (iid, byts, w, h, fmt, gx, gy) in enumerate(rows):
+        payload = rb.column(7)[k]
+        cands = ref.cands_for(gx, gy, payload)
+        owner, scratch = ref.owner_for(gx, gy, h, w, cands, payload)
+        ref.drill_one(iid, int(iid[1:5]), byts, h, w, fmt, owner, scratch,
+                      want)
+
+    def frame(o):
+        return (drill_op._flush_arrow(plugin, o).to_pandas()
+                .sort_values(["image_id", "poly_id"])
+                .reset_index(drop=True))
+
+    got, exp = frame(out), frame(want)
+    assert len(got) > 0 and set(got["image_id"]) == {r[0] for r in rows}
+    for name, typ in plugin.partial_fields:
+        if typ == "long":
+            assert (got[name] == exp[name]).all(), name
+        else:
+            np.testing.assert_allclose(got[name], exp[name], rtol=1e-12,
+                                       err_msg=name)
+    pd.testing.assert_frame_equal(got[["poly_id", "image_id", "ts"]],
+                                  exp[["poly_id", "image_id", "ts"]])
+
+
+def test_short_multiraw_payload_takes_per_tile_path(grid, polys,
+                                                     monkeypatch):
+    """One short payload in a WIT stack leaves the stack for the per-tile
+    path, whose decode raises the error it raises on that tile alone; the
+    rest of the stack still reaches the batch kernel."""
+    (ax, ay), _ = _two_footprints(grid, polys)
+    rb, rows = _wit_batch(grid, polys, [(0, ax, ay), (1, ax, ay),
+                                        (2, ax, ay)], cut=(1, 100))
+    rmap = {p["poly_id"]: (p["ordinal"], p["rings"]) for p in polys}
+    plugin = get_plugin("wit_ls9")
+    with pytest.raises(ValueError) as alone:
+        plugin.decode(rows[1][1], grid.h, grid.w, "multiraw")
+
+    spy = _WitSpy(monkeypatch)
+    plugin = spy.plugin
+    with pytest.raises(ValueError) as stacked:
+        drill_op._drill_rows_arrow(plugin, rb, _driller(plugin, grid, rmap),
+                                   drill_op._empty_out(plugin))
+    assert str(stacked.value) == str(alone.value)
+    assert spy.stacks == [2]
+    assert spy.per_tile == [rows[1][0]]
+
+
 def _driller(plugin, grid, rmap, budget=17 << 24):
     return drill_op._Driller(plugin, grid, rmap, budget)
 

@@ -11,10 +11,12 @@ Writes PLANS.md at the repo root.
 """
 
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from dea_conflux_spark import datagen
 from dea_conflux_spark.config import get_spark
@@ -292,7 +294,7 @@ def main():
     out += ["", "```", plan.strip(), "```", "",
             "## Cogrouped huge-layer partials plan", "",
             "```", cg_plan.strip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("\n".join(f"{'PASS' if ok else 'FAIL'} {n}" for n, ok in checks))
     spark.stop()
