@@ -47,7 +47,7 @@ from ..core import geom
 from ..datagen import GridSpec
 from ..plugins.base import DrillSpec
 from .cover import polygon_cover_df
-from .tilecells import extents_by_ts, tile_cells, tile_meta
+from .tilecells import extents_by_ts, image_id_keys, tile_cells, tile_meta
 
 FLAG_COLS = ["conflux_n", "conflux_s", "conflux_e", "conflux_w"]
 
@@ -140,7 +140,7 @@ class _Driller:
     def owner_for(self, gx, gy, h, w, cands, payload):
         """-> (owner raster, per-slot scratch dict).  The scratch dict
         shares the owner's cache lifetime; plugins memoize owner-derived
-        index structures in it (base.owner_index)."""
+        index structures in it (base.owner_segments)."""
         key = (gx, gy, h, w)
         entry = self.owners.get(key)
         if entry is not None:
@@ -165,11 +165,8 @@ class _Driller:
         rings = payload.values.field("rings") if self.rmap is None else None
         # owner holds the DENSE candidate position (0..len(cands)-1), not
         # the layer-global ordinal: cands ascend by ordinal, so ascending
-        # position overwrite preserves rasterize-last-wins, while the
-        # per-tile count arrays (bincount minlength) shrink from the
-        # global ordinal RANGE (10^4+ on a dense layer -> 100s of KB
-        # zeroed per tile) to the candidate count (~10).  ``o2p`` in the
-        # slot scratch maps positions back to poly_ids for the output.
+        # position overwrite preserves rasterize-last-wins.  ``o2p`` in
+        # the slot scratch maps positions back to poly_ids for the output.
         owner = np.full((h, w), -1, dtype=np.int32)
         for pos, (ordinal, pid) in enumerate(cands):
             prep = self.preps.get(pid)
@@ -194,32 +191,21 @@ class _Driller:
             sub = geom.contains_grid(prep, xs[j0:j1], ys[i0:i1])
             view = owner[i0:i1, j0:j1]
             view[sub] = pos
-        return (owner, {"o2p": {i: pid for i, (_, pid) in enumerate(cands)},
-                        "ords": list(range(len(cands)))})
+        return owner, {"o2p": {i: pid for i, (_, pid) in enumerate(cands)}}
 
     def drill_one(self, image_id, ts_idx, byts, h, w, fmt, owner, scratch,
                   out):
-        """Drill one tile into the ``out`` chunk accumulator (see
-        ``_flush_arrow``) against its footprint's owner raster."""
-        plugin = self.plugin
-        raw = plugin.decode(byts, h, w, fmt)
-        ords = scratch["ords"]
-        grouped = plugin.partials_grouped_raw(raw, owner, ords,
-                                              scratch=scratch)
-        if grouped is None:
-            bands = plugin.transform(raw)
-            grouped = plugin.partials_grouped(bands, owner, ords,
-                                              scratch=scratch)
-        if not grouped:
-            return
-        o2p = scratch["o2p"]
-        vals = list(grouped.values())
-        out["poly_id"].append([o2p[o] for o in grouped])
-        out["_meta"].append((image_id, ts_idx, len(vals)))
-        for i, (name, typ) in enumerate(plugin.partial_fields):
-            out[name].append(np.fromiter((v[i] for v in vals),
-                                         dtype=_DTYPES[typ],
-                                         count=len(vals)))
+        """Drill one tile the kernel cannot take as stored (another
+        format, a payload of another length) into the ``out`` chunk
+        accumulator: decode it, which raises on a malformed payload, and
+        run the plugin's kernel on it as a T=1 stack of the decoded
+        planes' bytes, concatenated in band order."""
+        raw = self.plugin.decode(byts, h, w, fmt)
+        planes = raw.values() if isinstance(raw, dict) else (raw,)
+        row = np.concatenate([np.ascontiguousarray(p).view(np.uint8).ravel()
+                              for p in planes])
+        _drill_stack(self.plugin, row[None], [(image_id, ts_idx)], owner,
+                     scratch, out)
 
 
 _DTYPES = {"long": np.int64, "double": np.float64}
@@ -228,10 +214,10 @@ _EPOCH_US = int(np.datetime64(EPOCH, "us").astype(np.int64))
 
 
 def _empty_out(plugin: DrillSpec) -> dict:
-    """Per-batch chunk accumulator: ``poly_id`` holds one id-list chunk
-    per tile or time stack, ``_meta`` one ``(image_id, ts_idx, n_rows)``
-    tuple per tile, each partial field one small numpy array per tile or
-    stack.  ``_flush_arrow`` assembles the columns with
+    """Per-batch chunk accumulator: ``poly_id`` holds one id-array chunk
+    per time stack, ``_meta`` one ``(image_id, ts_idx, n_rows)`` tuple
+    per tile, each partial field one small numpy array per stack.
+    ``_flush_arrow`` assembles the columns with
     ``np.repeat``/``concatenate`` — the output build is vectorised
     instead of ~10 python appends per output row."""
     out = {"poly_id": [], "_meta": []}
@@ -275,9 +261,7 @@ def _footprint_cells(meta: DataFrame, base_res: int) -> DataFrame:
     fps = fps.withColumn(
         "image_id", F.format_string("t0000_x%03d_y%03d", "gx", "gy"))
     return tile_cells(fps, base_res=base_res).select(
-        F.regexp_extract("image_id", r"_x(\d+)_", 1).cast("int").alias("gx"),
-        F.regexp_extract("image_id", r"_y(\d+)$", 1).cast("int").alias("gy"),
-        "cell")
+        *image_id_keys("gx", "gy").values(), "cell")
 
 
 def footprint_candidates(meta: DataFrame, poly_cells: DataFrame,
@@ -423,10 +407,7 @@ def drill_partials(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
     # candidate RINGS arrive via the pruned-dimension broadcast or (scale
     # path) through the same join — see the ``rings`` docstring above.
     work = (tiles.select("image_id", "bytes", "w", "h", "fmt")
-            .withColumn("gx", F.regexp_extract(
-                "image_id", r"_x(\d+)_", 1).cast("int"))
-            .withColumn("gy", F.regexp_extract(
-                "image_id", r"_y(\d+)$", 1).cast("int"))
+            .withColumns(image_id_keys("gx", "gy"))
             .join(F.broadcast(fc), ["gx", "gy"]))
 
     grid_b = sc.broadcast(grid)
@@ -480,17 +461,14 @@ def _drill_rows_arrow(plugin: DrillSpec, rb, driller: _Driller, out: dict,
 
     Rows arrive in storage order: nothing upstream sorts them.  A stable
     argsort on (gx, gy, h, w, fmt) over the batch groups the
-    same-footprint rows into TIME STACKS fed to the plugin's batch
-    kernel (``partials_grouped_raw_batch``) — per-tile python/numpy
-    dispatch is paid once per stack, not once per tile.  The plugin
-    declares the payloads its kernel takes (``stack_nbytes``: a format
-    and a byte length per tile shape), so a group is stacked whatever
-    its format; rows of any other format or length (a lossy codec, a
-    truncated payload) and every row of a plugin without a kernel take
-    the per-tile ``drill_one`` path.  The two paths agree exactly on
-    every count (golden-tested); see the kernel contract for the one
-    float exception.  Rows whose ``image_id`` does not parse are
-    skipped.
+    same-footprint rows into TIME STACKS fed to the plugin's one kernel
+    (``partials_grouped_raw_batch``) — per-tile python/numpy dispatch is
+    paid once per stack, not once per tile.  The plugin declares the
+    stored payloads its kernel takes (``stack_nbytes``: a format and a
+    byte length per tile shape); a row of any other format or length (a
+    lossy codec, a truncated payload) is decoded by ``drill_one`` and
+    reaches the same kernel as a stack of one.  Rows whose ``image_id``
+    does not parse are skipped.
 
     The payload column stays in the Arrow buffer: a stack whose rows are
     adjacent (a footprint's timesteps stored together, or a cogroup
@@ -550,40 +528,39 @@ def _drill_rows_arrow(plugin: DrillSpec, rb, driller: _Driller, out: dict,
         nb = plugin.stack_nbytes(fmt, h, w)
         fit = (lens[keep] == nb if nb is not None
                else np.zeros(len(keep), dtype=bool))
-        if fit.any() and _drill_stack(plugin, data, starts, nb, keep[fit],
-                                      list(compress(metas, fit)), owner,
-                                      scratch, out):
-            keep, metas = keep[~fit], list(compress(metas, ~fit))
-        for k, (iid, ts_idx) in zip(keep, metas):
+        if fit.any():
+            st = keep[fit]
+            if st[-1] - st[0] + 1 == len(st):
+                s0 = starts[st[0]]
+                raws2d = data[s0:s0 + nb * len(st)].reshape(len(st), nb)
+            else:
+                raws2d = np.stack([data[starts[k]:starts[k] + nb]
+                                   for k in st])
+            _drill_stack(plugin, raws2d, list(compress(metas, fit)), owner,
+                         scratch, out)
+        for k, (iid, ts_idx) in zip(keep[~fit], compress(metas, ~fit)):
             byts = data[starts[k]:starts[k] + lens[k]].tobytes()
             driller.drill_one(iid, ts_idx, byts, h, w, fmt, owner, scratch,
                               out)
 
 
-def _drill_stack(plugin: DrillSpec, data, starts, nb: int, rows, metas,
-                 owner, scratch: dict, out: dict) -> bool:
-    """Feed the rows ``rows`` (payloads of ``nb`` bytes each, one
-    footprint) to the plugin's batch kernel as one (T, nb) stack; False
-    when the kernel declines it."""
-    if rows[-1] - rows[0] + 1 == len(rows):
-        s0 = starts[rows[0]]
-        raws2d = data[s0:s0 + nb * len(rows)].reshape(len(rows), nb)
-    else:
-        raws2d = np.stack([data[starts[k]:starts[k] + nb] for k in rows])
-    res = plugin.partials_grouped_raw_batch(raws2d, owner, scratch=scratch)
-    if res is None:
-        return False
-    ords_out = res[0]
-    if ords_out:
-        o2p = scratch["o2p"]
-        pids = np.array([o2p[o] for o in ords_out], dtype=object)
-        out["poly_id"].append(np.tile(pids, len(rows)))
-        for iid, ts_idx in metas:
-            out["_meta"].append((iid, ts_idx, len(ords_out)))
-        for (name, typ), arr in zip(plugin.partial_fields, res[1:]):
-            out[name].append(np.ascontiguousarray(
-                arr, dtype=_DTYPES[typ]).ravel())
-    return True
+def _drill_stack(plugin: DrillSpec, raws2d, metas, owner, scratch: dict,
+                 out: dict) -> None:
+    """Run the plugin's kernel over ``raws2d``, a (T, n) stack of one
+    footprint's payloads with ``metas`` its T ``(image_id, ts_idx)``,
+    into ``out``."""
+    ords_out, *fields = plugin.partials_grouped_raw_batch(raws2d, owner,
+                                                          scratch=scratch)
+    if not ords_out:
+        return
+    o2p = scratch["o2p"]
+    pids = np.array([o2p[o] for o in ords_out], dtype=object)
+    out["poly_id"].append(np.tile(pids, len(metas)))
+    for iid, ts_idx in metas:
+        out["_meta"].append((iid, ts_idx, len(ords_out)))
+    for (name, typ), arr in zip(plugin.partial_fields, fields):
+        out[name].append(np.ascontiguousarray(arr, dtype=_DTYPES[typ])
+                         .ravel())
 
 
 def drill(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
@@ -630,13 +607,10 @@ def with_slot_keys(tiles: DataFrame, n_time_buckets: int = 1) -> DataFrame:
     At ingest these are STORED columns of the bucketed tile layout (see
     :func:`write_tiles_bucketed`); this helper is the derive-on-read
     fallback for ad-hoc frames."""
-    ts = F.regexp_extract("image_id", r"^t(\d+)_", 1).cast("int")
-    return (tiles
-            .withColumn("gx", F.regexp_extract(
-                "image_id", r"_x(\d+)_", 1).cast("int"))
-            .withColumn("gy", F.regexp_extract(
-                "image_id", r"_y(\d+)$", 1).cast("int"))
-            .withColumn("tb", (ts % n_time_buckets).cast("int")))
+    keys = image_id_keys()
+    ts = keys.pop("ts_idx")
+    return tiles.withColumns(
+        {**keys, "tb": (ts % n_time_buckets).cast("int")})
 
 
 def write_tiles_bucketed(tiles: DataFrame, table: str, n_buckets: int = 64,

@@ -40,6 +40,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..core import codec
+from .tilecells import image_id_keys
 
 WOFL_MASK = 0b11110011  # reference plugins/waterbodies.py wofl mask
 WET = 128
@@ -51,13 +52,9 @@ PIXEL_SCHEMA = "x double, y double, n_wet long, n_clear long"
 
 
 def with_grid_position(tiles: DataFrame) -> DataFrame:
-    """Derive (gx, gy, ts_idx) from the ``image_id`` key, JVM-side
+    """Derive (gx, gy) from the ``image_id`` key, JVM-side
     (datagen.image_id format ``t%04d_x%03d_y%03d``)."""
-    return (tiles
-            .withColumn("gx", F.regexp_extract("image_id",
-                                               r"_x(\d+)", 1).cast("int"))
-            .withColumn("gy", F.regexp_extract("image_id",
-                                               r"_y(\d+)", 1).cast("int")))
+    return tiles.withColumns(image_id_keys("gx", "gy"))
 
 
 def wofs_summary_rasters(tiles: DataFrame,

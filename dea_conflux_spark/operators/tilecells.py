@@ -23,16 +23,24 @@ from ..datagen import GridSpec
 
 COARSEST_COVER_RES = 4
 
+# the int keys of a ``t%04d_x%03d_y%03d`` image id (datagen.image_id)
+_IMAGE_ID_KEYS = {"ts_idx": r"^t(\d+)_", "gx": r"_x(\d+)_", "gy": r"_y(\d+)$"}
+
+
+def image_id_keys(*names: str) -> dict:
+    """{name: int Column aliased to name}: the ``ts_idx``/``gx``/``gy``
+    keys (all three by default) parsed JVM-side from ``image_id`` —
+    the one place the engine parses them."""
+    return {n: F.regexp_extract("image_id", _IMAGE_ID_KEYS[n], 1)
+            .cast("int").alias(n) for n in names or _IMAGE_ID_KEYS}
+
 
 def tile_meta(tiles: DataFrame, grid: GridSpec) -> DataFrame:
     """(image_id, ts_idx, gx, gy, ts, x0, y0, x1, y1) — placement columns
     derived from image_id; never touches ``bytes``."""
     sx, sy = grid.tile_span_x, grid.tile_span_y
     return tiles.select(
-        "image_id",
-        F.regexp_extract("image_id", r"^t(\d+)_", 1).cast("int").alias("ts_idx"),
-        F.regexp_extract("image_id", r"_x(\d+)_", 1).cast("int").alias("gx"),
-        F.regexp_extract("image_id", r"_y(\d+)$", 1).cast("int").alias("gy"),
+        "image_id", *image_id_keys().values(),
     ).select(
         "image_id", "ts_idx", "gx", "gy",
         F.timestamp_add("DAY", F.col("ts_idx"),

@@ -5,15 +5,20 @@ module (reference __main__.py:198-235): ``transform(xr.Dataset)`` runs
 per-pixel over a whole scene and ``summarise(xr.Dataset)`` reduces one
 polygon's pixel bag to scalars.  Here a plugin is a :class:`DrillSpec`:
 
-* ``transform`` — vectorized numpy over one decoded tile (runs inside the
-  Arrow-batched mapInPandas drill UDF; no per-row Python),
-* ``partials`` — per-(polygon, tile) partial sums computed in the same UDF
-  (Spark's map-side combine, SURVEY.md §2.D1), and
+* ``partials_grouped_raw_batch`` — the one kernel: per-(polygon, tile)
+  partial aggregates for a (T, payload) stack of one footprint's tiles,
+  run inside the Arrow-batched ``mapInArrow`` drill UDF (Spark's
+  map-side combine, SURVEY.md §2.D1); ``stack_nbytes`` declares the
+  stored payloads it takes, and any other row is decoded and drilled as
+  a stack of one;
 * ``final_aggs`` — native Spark aggregate expressions that combine partials
   into the plugin's published metrics (whole-stage-codegen'd).
 
-This decomposition replaces the reference's per-polygon Python summarise
-loop (reference drill.py:675-686) with Spark's partial/final agg contract.
+``transform`` + ``partials`` (per tile) and ``summarise_numpy`` (per
+polygon) keep the reference's per-pixel formulation; the numpy oracle
+and the tests hold the kernel to it.  This decomposition replaces the
+reference's per-polygon Python summarise loop (reference
+drill.py:675-686) with Spark's partial/final agg contract.
 """
 
 from __future__ import annotations

@@ -25,34 +25,19 @@ class SumWet(DrillSpec):
     def partials(self, bands: dict, mask: np.ndarray) -> tuple:
         return (int(bands["water"][mask].sum()),)
 
-    def partials_grouped(self, bands: dict, owner: np.ndarray,
-                         ordinals: list, scratch: dict | None = None) -> dict:
-        oi = base.owner_index(owner, scratch)
-        if not oi:
-            return {}
-        sel, idx, lo, nb, _n_px, nz = oi
-        wet = bands["water"].ravel()[sel] == 1.0
-        n_wet = np.bincount(idx[wet], minlength=nb)
-        return {o + lo: (int(n_wet[o]),) for o in nz}
+    def stack_nbytes(self, fmt, h, w):
+        return h * w if fmt == "raw" else None
 
-    def partials_grouped_raw(self, raw, owner: np.ndarray,
-                             ordinals: list,
-                             scratch: dict | None = None) -> dict:
-        # bit-identical to transform()+partials_grouped(): wet iff the
-        # raw byte equals 128 — owner-sorted gather + slice counts, no
-        # float band and no per-element bincount (see base.owner_segments)
-        oi = base.owner_index(owner, scratch)
-        if not oi:
-            return {}
-        lo = oi[2]
-        gix, segs = base.owner_segments(oi, scratch)
-        cnz = np.count_nonzero
-        full = base.full_tile_segment(owner.size, segs)
-        if full is not None:
-            o, _n = full
-            return {o + lo: (int(cnz(raw.ravel() == 128)),)}
-        wet = raw.ravel()[gix] == 128
-        return {o + lo: (int(cnz(wet[a:b])),) for o, a, b in segs}
+    def partials_grouped_raw_batch(self, raws2d, owner, scratch=None):
+        # wet iff the raw byte equals 128: one gather through the owner
+        # segments and one count per footprint stack, no float band
+        segs = base.owner_segments(owner, scratch)
+        if not segs:
+            return ([],)
+        gix, starts, _lens, ords_out, full = segs
+        sub = raws2d if full else np.take(raws2d, gix, axis=1)
+        wet = sub == 128
+        return (ords_out, base.count_segments(wet, starts, full))
 
     def final_aggs(self):
         from pyspark.sql import functions as F

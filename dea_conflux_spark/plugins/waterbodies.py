@@ -40,87 +40,26 @@ class WaterbodiesC3(DrillSpec):
         n_wet = int(np.nansum(v))
         return (n_px, n_missing, n_wet)
 
-    def partials_grouped(self, bands: dict, owner: np.ndarray,
-                         ordinals: list, scratch: dict | None = None) -> dict:
-        # single gather + two band-dependent bincounts over the assigned
-        # pixels — O(pixels), independent of candidate count; the
-        # owner-derived index (+ n_px) comes from the per-slot memo
-        oi = base.owner_index(owner, scratch)
-        if not oi:
-            return {}
-        sel, idx, lo, nb, n_px, nz = oi
-        v = bands["water"].ravel()[sel]
-        n_missing = np.bincount(idx[np.isnan(v)], minlength=nb)
-        n_wet = np.bincount(idx[v == 1.0], minlength=nb)
-        return {o + lo: (int(n_px[o]), int(n_missing[o]), int(n_wet[o]))
-                for o in nz}
-
-    def partials_grouped_raw(self, raw, owner: np.ndarray,
-                             ordinals: list,
-                             scratch: dict | None = None) -> dict:
-        # bit-identical to transform()+partials_grouped() without the
-        # float32 NaN band: gather the assigned pixels in owner-sorted
-        # order (one fancy gather through the per-slot segment memo),
-        # classify with two SIMD boolean passes over the uint8 bitfield,
-        # and count each polygon's wet/missing pixels with slice-local
-        # ``count_nonzero`` — no per-element bincount/LUT kernels
-        # (~3 ns/element) anywhere in the per-tile path.  water is NaN
-        # iff ~is_ok and ==1.0 iff is_wet (wet implies ok), so the
-        # counts are pure boolean counts over the gathered bytes.
-        oi = base.owner_index(owner, scratch)
-        if not oi:
-            return {}
-        lo = oi[2]
-        gix, segs = base.owner_segments(oi, scratch)
-        cnz = np.count_nonzero
-        full = base.full_tile_segment(owner.size, segs)
-        if full is not None:
-            o, n = full
-            wofl = raw.ravel() & 0b11110011
-            wet = wofl == 128
-            ok = wet | (wofl == 0)
-            return {o + lo: (n, n - int(cnz(ok)), int(cnz(wet)))}
-        vv = raw.ravel()[gix]
-        wofl = vv & 0b11110011
-        wet = wofl == 128
-        ok = wet | (wofl == 0)
-        return {o + lo: (b - a, (b - a) - int(cnz(ok[a:b])),
-                         int(cnz(wet[a:b])))
-                for o, a, b in segs}
-
     def stack_nbytes(self, fmt, h, w):
         return h * w if fmt == "raw" else None
 
     def partials_grouped_raw_batch(self, raws2d, owner, scratch=None):
-        # time-stack variant of partials_grouped_raw: one classify pass
-        # + one reduceat per count over ALL T tiles of the slot.  Same
-        # booleans, same integer counts — bit-identical per row.
-        oi = base.owner_index(owner, scratch)
-        if not oi:
+        # one gather through the owner segments, two SIMD boolean passes
+        # over the uint8 bitfield and one count per field over ALL T
+        # tiles of the footprint.  water is NaN iff ~is_ok and ==1.0 iff
+        # is_wet (wet implies ok), so every field is a boolean count:
+        # bit-identical to transform() + partials_grouped() per row.
+        segs = base.owner_segments(owner, scratch)
+        if not segs:
             return ([],)
-        lo = oi[2]
-        gix, segs = base.owner_segments(oi, scratch)
-        T = raws2d.shape[0]
-        full = base.full_tile_segment(owner.size, segs)
-        if full is not None:
-            o, n = full
-            wofl = raws2d & 0b11110011
-            wet = wofl == 128
-            ok = wet | (wofl == 0)
-            n_ok = np.count_nonzero(ok, axis=1)
-            n_wet = np.count_nonzero(wet, axis=1)
-            n_px = np.full((T, 1), n, dtype=np.int64)
-            return ([o + lo], n_px, (n - n_ok)[:, None].astype(np.int64),
-                    n_wet[:, None].astype(np.int64))
-        starts, lens, ords_out = base.segment_arrays(lo, segs, scratch)
-        sub = raws2d[:, gix]
+        gix, starts, lens, ords_out, full = segs
+        sub = raws2d if full else np.take(raws2d, gix, axis=1)
         wofl = sub & 0b11110011
         wet = wofl == 128
         ok = wet | (wofl == 0)
-        n_ok = np.add.reduceat(ok, starts, axis=1, dtype=np.int64)
-        n_wet = np.add.reduceat(wet, starts, axis=1, dtype=np.int64)
-        n_px = np.broadcast_to(lens[None, :], (T, len(lens)))
-        return (ords_out, n_px, lens[None, :] - n_ok, n_wet)
+        n_px = np.broadcast_to(lens, (raws2d.shape[0], len(lens)))
+        return (ords_out, n_px, lens - base.count_segments(ok, starts, full),
+                base.count_segments(wet, starts, full))
 
     def final_aggs(self):
         from pyspark.sql import functions as F

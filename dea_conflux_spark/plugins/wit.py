@@ -102,24 +102,6 @@ class WitLs9(DrillSpec):
         sums = tuple(float(np.nansum(bands[b][mask])) for b in OUT_BANDS)
         return (n_px, n_mask, *sums)
 
-    def partials_grouped(self, bands: dict, owner: np.ndarray,
-                         ordinals: list, scratch: dict | None = None) -> dict:
-        oi = base.owner_index(owner, scratch)
-        if not oi:
-            return {}
-        sel, idx, lo, nb, n_px, nz = oi
-        mvals = bands["mask"].ravel()[sel]
-        valid = ~np.isnan(mvals)
-        n_mask = np.bincount(idx[valid], minlength=nb)
-        sums = []
-        for b in OUT_BANDS:
-            v = bands[b].ravel()[sel]
-            vv = np.where(np.isnan(v), 0.0, v)
-            sums.append(np.bincount(idx, weights=vv, minlength=nb))
-        return {o + lo: (int(n_px[o]), int(n_mask[o]),
-                         *[float(s[o]) for s in sums])
-                for o in nz}
-
     def stack_nbytes(self, fmt, h, w):
         return _NBYTES_PER_PX * h * w if fmt == "multiraw" else None
 
@@ -129,13 +111,11 @@ class WitLs9(DrillSpec):
         # _CHUNK_PX gathered pixels (bounds the float64 temporaries and
         # keeps them cache-sized).  n_px/n_mask/sum_wet/sum_water are the
         # per-tile counts exactly; sum_pv/npv/bs are the exact integer
-        # sums / 100 (the per-tile path adds the x/100 values one by one).
-        oi = base.owner_index(owner, scratch)
-        if not oi:
+        # sums / 100 (``partials`` adds the x/100 values one by one).
+        segs = base.owner_segments(owner, scratch)
+        if not segs:
             return ([],)
-        gix, segs = base.owner_segments(oi, scratch)
-        starts, lens, ords_out = base.segment_arrays(oi[2], segs, scratch)
-        full = base.full_tile_segment(owner.size, segs) is not None
+        gix, starts, lens, ords_out, full = segs
         T = raws2d.shape[0]
         counts = np.empty((3, T, len(starts)), np.int64)
         fc_sums = np.empty((3, T, len(starts)), np.int64)

@@ -52,30 +52,21 @@ class WoFlags(DrillSpec):
         return (nan_sum, *[int(((iv & (1 << bit)) > 0).sum())
                            for bit in self.FLAGS.values()])
 
-    def partials_grouped_raw(self, raw, owner: np.ndarray,
-                             ordinals: list,
-                             scratch: dict | None = None) -> dict:
-        # bit-identical to transform()+partials_grouped(): the float band
-        # is the uint8 payload upcast (never NaN -> nan_sum is always 0),
-        # so each flag count is a boolean pass over the owner-sorted
-        # gathered bytes + slice-local counts — replaces the generic
-        # per-ordinal O(cands x pixels) mask loop
-        oi = base.owner_index(owner, scratch)
-        if not oi:
-            return {}
-        lo = oi[2]
-        gix, segs = base.owner_segments(oi, scratch)
-        cnz = np.count_nonzero
-        full = base.full_tile_segment(owner.size, segs)
-        if full is not None:
-            o, _n = full
-            flat = raw.ravel()
-            return {o + lo: (0, *[int(cnz(flat & (1 << bit)))
-                                  for bit in self.FLAGS.values()])}
-        vv = raw.ravel()[gix]
-        flags = [(vv & (1 << bit)) > 0 for bit in self.FLAGS.values()]
-        return {o + lo: (0, *[int(cnz(fl[a:b])) for fl in flags])
-                for o, a, b in segs}
+    def stack_nbytes(self, fmt, h, w):
+        return h * w if fmt == "raw" else None
+
+    def partials_grouped_raw_batch(self, raws2d, owner, scratch=None):
+        # the float band is the uint8 payload upcast (never NaN, so
+        # nan_sum is always 0): each flag count is one boolean pass over
+        # the gathered bytes and one count per footprint stack
+        segs = base.owner_segments(owner, scratch)
+        if not segs:
+            return ([],)
+        gix, starts, _lens, ords_out, full = segs
+        sub = raws2d if full else np.take(raws2d, gix, axis=1)
+        counts = [base.count_segments((sub & (1 << bit)) != 0, starts, full)
+                  for bit in self.FLAGS.values()]
+        return (ords_out, np.zeros_like(counts[0]), *counts)
 
     def final_aggs(self):
         from pyspark.sql import functions as F

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..datagen import TILE_SCHEMA, GridSpec
 from ..operators.drill import drill_partials
+from ..operators.tilecells import image_id_keys
 
 
 def nrt_drill_stream(spark, tiles_path: str, polygons, plugin,
@@ -227,8 +228,7 @@ def windowed_tile_counts(spark, tiles_path: str):
     day window keyed by timestep, with a watermark for late data — the
     engine's ``F.window`` surface (SURVEY.md §2.I)."""
     stream = (spark.readStream.schema(TILE_SCHEMA).parquet(tiles_path)
-              .withColumn("ts_idx", F.regexp_extract(
-                  "image_id", r"^t(\d+)_", 1).cast("int"))
+              .withColumns(image_id_keys("ts_idx"))
               .withColumn("ts", F.timestamp_add(
                   "DAY", F.col("ts_idx"),
                   F.lit("2020-01-01").cast("timestamp"))))

@@ -10,7 +10,7 @@ golden/oracle tests that also cover them.
 import numpy as np
 import pytest
 
-from dea_conflux_spark.plugins import get_plugin
+from dea_conflux_spark.plugins import REGISTRY, get_plugin
 
 
 @pytest.fixture(scope="module")
@@ -27,8 +27,8 @@ def _random_owner(rng, h, w, n_cands, lo=0):
 
 
 class TestWaterbodiesBatchKernel:
-    """partials_grouped_raw_batch(T-stack) must equal
-    partials_grouped_raw applied per row, count for count."""
+    """partials_grouped_raw_batch(T-stack) must equal transform() +
+    partials_grouped() applied per row, count for count."""
 
     def _check(self, raws2d, owner, h, w):
         plugin = get_plugin("waterbodies_c3")
@@ -36,8 +36,8 @@ class TestWaterbodiesBatchKernel:
         res = plugin.partials_grouped_raw_batch(raws2d, owner, scratch={})
         assert res is not None
         ords_out = res[0]
-        per_row = [plugin.partials_grouped_raw(
-            raws2d[t].reshape(h, w), owner, ords, scratch={})
+        per_row = [plugin.partials_grouped(
+            plugin.transform(raws2d[t].reshape(h, w)), owner, ords)
             for t in range(raws2d.shape[0])]
         if not ords_out:
             assert all(not g for g in per_row)
@@ -171,6 +171,24 @@ class TestWitBatchKernel:
         plugin = get_plugin("wit_ls9")
         assert plugin.stack_nbytes("multiraw", 4, 8) == 16 * 4 * 8
         assert plugin.stack_nbytes("raw", 4, 8) is None
+
+
+@pytest.mark.parametrize("name", sorted(REGISTRY))
+def test_every_plugin_kernel_takes_its_declared_stack(rng, name):
+    """Every registered plugin drills through its batch kernel: it
+    declares a stored format and returns one (T, n_ords) array per
+    partial field for a stack of that format."""
+    plugin = REGISTRY[name]
+    h, w = 8, 16
+    nbs = {f: plugin.stack_nbytes(f, h, w) for f in ("raw", "multiraw")}
+    nb = next(n for n in nbs.values() if n is not None)
+    owner = _random_owner(rng, h, w, n_cands=3)
+    raws2d = rng.integers(0, 256, (2, nb)).astype(np.uint8)
+    ords_out, *fields = plugin.partials_grouped_raw_batch(raws2d, owner,
+                                                          scratch={})
+    assert list(ords_out) == sorted(set(owner[owner >= 0].tolist()))
+    assert len(fields) == len(plugin.partial_fields)
+    assert all(np.shape(f) == (2, len(ords_out)) for f in fields)
 
 
 class TestAssignNearestBitExact:

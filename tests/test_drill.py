@@ -367,6 +367,41 @@ def test_drill_result_independent_of_tile_order(tiles, polygons, grid, polys,
         _compare(got, exp_sw, ["water"])
 
 
+@pytest.fixture(scope="module")
+def dct_tiles_pdf(tiles_pdf):
+    """The conftest tiles re-encoded with the lossy ``dct`` codec: no
+    plugin stacks ``dct`` payloads, so every row is decoded and drilled
+    alone."""
+    from dea_conflux_spark.core import codec
+
+    out = tiles_pdf.copy()
+    out["bytes"] = [codec.encode(codec.decode(b, int(h), int(w), "raw"),
+                                 "dct")
+                    for b, h, w in zip(out["bytes"], out["h"], out["w"])]
+    out["fmt"] = "dct"
+    return out
+
+
+@pytest.mark.parametrize("name, metrics", [
+    ("waterbodies_c3", ["px_wet", "pc_wet", "pc_missing"]),
+    ("sum_wet", ["water"])])
+def test_dct_tiles_match_oracle(spark, polygons, grid, polys, dct_tiles_pdf,
+                                name, metrics):
+    """A drill of ``dct`` tiles (the per-tile decode path, on rows that
+    decode cleanly) reproduces the oracle on the same decoded pixels."""
+    from dea_conflux_spark import datagen
+
+    plugin = get_plugin(name)
+    assert plugin.stack_nbytes("dct", grid.h, grid.w) is None
+    tiles = spark.createDataFrame(dct_tiles_pdf, schema=datagen.TILE_SCHEMA)
+    got = drill_op.drill(tiles, polygons, plugin, grid,
+                         partial=False).toPandas()
+    exp = oracle.oracle_drill(grid, polys, dct_tiles_pdf, plugin,
+                              partial=False)
+    assert len(got) == len(exp) > 0
+    _compare(got, exp, metrics)
+
+
 def _tile_batch(rows, cands):
     """An Arrow batch shaped like the drill UDF's input: ``rows`` are
     (image_id, bytes, w, h, fmt, gx, gy) tuples; every row carries the
@@ -387,7 +422,7 @@ def _tile_batch(rows, cands):
 def test_interleaved_batch_stacks_once_per_footprint(grid, polys, tiles_pdf):
     """A batch holding footprints A, B, A, B, A feeds the batch kernel
     once per footprint (T=3 and T=2), and its output equals the per-tile
-    ``drill_one`` path row for row."""
+    ``drill_one`` path (the same kernel at T=1) row for row."""
     from dea_conflux_spark import datagen
     from dea_conflux_spark.plugins.waterbodies import WaterbodiesC3
 
@@ -428,7 +463,8 @@ def test_interleaved_batch_stacks_once_per_footprint(grid, polys, tiles_pdf):
         owner, scratch = ref.owner_for(gx, gy, h, w, cands, payload)
         ref.drill_one(iid, int(iid[1:5]), byts, h, w, fmt, owner, scratch,
                       want)
-    assert sorted(stacks) == [2, 3]  # the reference path never stacks
+    # the reference path reaches the kernel one tile at a time
+    assert sorted(stacks) == [1, 1, 1, 1, 1, 2, 3]
 
     def frame(o):
         return (drill_op._flush_arrow(plugin, o).to_pandas()

@@ -98,27 +98,36 @@ def test_polygon_cover_is_superset(seed):
 @given(seed=st.integers(0, 2**31 - 1))
 @settings(max_examples=25, deadline=None)
 def test_plugin_raw_path_identical_to_generic(seed):
-    """partials_grouped_raw (the per-tile hot path: owner-sorted gather +
-    slice-local counts) must be bit-identical to transform() +
-    partials_grouped() for arbitrary tiles and owner rasters — the
-    invariant every drill-UDF optimisation round leans on."""
+    """The batch kernel over a random (T, h*w) stack of raw tiles (the
+    drill's one kernel: owner-sorted gather + per-slice counts) must be
+    bit-identical, row by row, to transform() + partials_grouped() for
+    arbitrary tiles and owner rasters — the invariant every drill-UDF
+    optimisation round leans on."""
     from dea_conflux_spark.plugins import get_plugin
 
     rng = np.random.default_rng(seed)
     h = w = int(rng.integers(4, 48))
-    raw = rng.integers(0, 256, (h, w), dtype=np.uint8)
+    raws2d = rng.integers(0, 256, (int(rng.integers(1, 5)), h * w),
+                          dtype=np.uint8)
     n_cands = int(rng.integers(1, 12))
     owner = rng.integers(-1, n_cands, (h, w)).astype(np.int32)
     ords = list(range(n_cands))
     # full-coverage single-owner raster: exercises the gather-free
-    # full_tile_segment fast path (huge-polygon interiors)
+    # full-tile path (huge-polygon interiors)
     owner_full = np.full((h, w), int(rng.integers(0, n_cands)),
                          dtype=np.int32)
     for name in ("waterbodies_c3", "sum_wet", "ga_ls_wo_3_flags",
                  "wofs_albers_flags"):
         plugin = get_plugin(name)
+        assert plugin.stack_nbytes("raw", h, w) == h * w
         for ow in (owner, owner_full):
-            got = plugin.partials_grouped_raw(raw, ow, ords, scratch={})
-            exp = plugin.partials_grouped(plugin.transform(raw), ow, ords,
-                                          scratch={})
-            assert got == exp, (name, got, exp)
+            ords_out, *fields = plugin.partials_grouped_raw_batch(
+                raws2d, ow, scratch={})
+            assert not ords_out or (len(fields)
+                                    == len(plugin.partial_fields))
+            for t, raw in enumerate(raws2d):
+                got = {o: tuple(int(f[t][k]) for f in fields)
+                       for k, o in enumerate(ords_out)}
+                exp = plugin.partials_grouped(
+                    plugin.transform(raw.reshape(h, w)), ow, ords)
+                assert got == exp, (name, t, got, exp)

@@ -1,5 +1,6 @@
+import os
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb, pandas as pd
 import __spark_entry__ as em
 from dea_conflux_spark.config import get_spark
